@@ -81,13 +81,7 @@ final class LucyStore(spark: SparkSession, rootDir: String,
   // equal measured cost.
 
   private def syncPartCache(v: SearchableIndex): Unit = {
-    def dirs(i: SearchableIndex): Seq[String] = i match {
-      case c: lucy.index.CompositeIndex => c.parts.map(_.dir)
-      case t: lucy.index.TombstonedIndex => dirs(t.inner)
-      case l: lucy.index.LucyIndex => Seq(l.dir)
-      case _ => Seq.empty
-    }
-    val live = dirs(v).toSet
+    val live = v.parts.map(_.dir).toSet
     val liveDeltas = live.filter(_.contains("/deltas/"))
     warmedParts.keys.filterNot(liveDeltas.contains).toSeq.foreach { d =>
       warmedParts.remove(d).foreach(_.foreach(_.unpersist()))
@@ -139,8 +133,10 @@ final class LucyStore(spark: SparkSession, rootDir: String,
             // probe + pruned plan probes for a view that no longer
             // serves) competes with the next put's own jobs for executor
             // slots under FIFO scheduling. A mutation that supersedes
-            // this view has already re-queued a warm (invalidate →
-            // warmAsync CAS), so bailing loses nothing: the queued warm
+            // this view will have re-queued a warm, because `invalidate`
+            // always follows `engineCache = None` with `warmAsync`, and
+            // the CAS succeeds because this warm already reset
+            // `warmQueued` — so bailing loses nothing: the queued warm
             // redoes the work against the live view. Checked between
             // steps, not mid-job — jobs themselves are delta-sized.
             def current = engineCache.contains(e)

@@ -34,6 +34,8 @@ case class TombstonedIndex(inner: SearchableIndex, override val tombstoneIds: Ar
   require(tombstoneIds.length <= Deletes.maxTombstones,
     s"${tombstoneIds.length} tombstones exceed ${Deletes.maxTombstones}: compact first")
 
+  def parts: Seq[LucyIndex] = inner.parts
+
   def segments(spark: SparkSession): DataFrame = inner.segments(spark)
 
   def docmap(spark: SparkSession): DataFrame = {

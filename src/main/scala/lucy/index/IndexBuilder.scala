@@ -55,6 +55,19 @@ trait SearchableIndex {
     * TombstonedIndex); the kernel skips them before they take heap slots.
     */
   def tombstoneIds: Array[Long] = Array.empty
+
+  /** The physical index directories behind this view. */
+  def parts: Seq[LucyIndex]
+
+  /** Fails loudly when a part was built with a different stemming flag
+    * than `stem`, the flag queries are tokenized with: the mismatch
+    * would otherwise silently miss every inflected term. Parts whose
+    * manifest does not record the flag are not checked.
+    */
+  def requireStemming(spark: SparkSession, stem: Boolean): Unit =
+    for (p <- parts; built <- p.manifest(spark).flatMap(_.stemming) if built != stem)
+      throw new IllegalArgumentException(s"index ${p.dir} was built with " +
+        s"stemming=$built but is searched with stemming=$stem; search with the build's flag")
 }
 
 /** On-disk index layout:
@@ -71,6 +84,7 @@ trait SearchableIndex {
   * }}}
   */
 case class LucyIndex(dir: String) extends SearchableIndex {
+  def parts: Seq[LucyIndex] = Seq(this)
   def docmap(spark: SparkSession): DataFrame = spark.read.parquet(s"$dir/docmap")
   def termStats(spark: SparkSession): DataFrame = spark.read.parquet(s"$dir/stats/terms")
   def segments(spark: SparkSession): DataFrame =
@@ -384,37 +398,28 @@ object IndexBuilder {
     val segments = spark.read.parquet(s"$indexDir/segments")
     val segmentsMs = (System.nanoTime() - tSeg0) / 1000000
 
-    // Per-partition manifest rows: aggregated once, collected (bounded —
-    // one row per segment partition), totals summed driver-side. The r6
-    // shape wrote them through one Spark job and then READ them back
-    // with schema inference — two more jobs per build whose only purpose
-    // was summing ≤ numPartitions tiny rows (guide §1.2: don't compute
-    // things you can carry).
-    val pmRows: Array[org.apache.spark.sql.Row] =
-      if (Manifest.stageDone(spark, s"$indexDir/meta/partitions")) {
-        spark.read.json(s"$indexDir/meta/partitions")
-          .select(col("partId"), col("blocks"), col("postings"), col("bytes"),
-            col("terms"), col("minTermHash"), col("maxTermHash"))
-          .collect()
-      } else {
-        val rows = Manifest.partitionManifests(segments).collect()
-        Manifest.writePartitionManifests(spark, s"$indexDir/meta/partitions", rows)
-        rows
-      }
-    val nPostings = pmRows.iterator.map(r => r.getLong(r.fieldIndex("postings"))).sum
-    val nBlocks = pmRows.iterator.map(r => r.getLong(r.fieldIndex("blocks"))).sum
+    // Per-partition manifest rows: aggregated once (one row per segment
+    // partition), committed, totals summed driver-side; a resumed build
+    // reads the committed rows back instead.
+    val pms = Manifest.read[PartitionManifest](spark, s"$indexDir/meta/partitions").getOrElse {
+      import spark.implicits._
+      val rows = Manifest.partitionManifests(segments).as[PartitionManifest].collect().toSeq
+      Manifest.write(spark, s"$indexDir/meta/partitions", rows)
+      rows
+    }
 
     val m = BuildManifest(
       fingerprint = fingerprint,
       docs = stats.n, avgdl = stats.avgdl,
-      postings = nPostings, blocks = nBlocks,
+      postings = pms.map(_.postings).sum, blocks = pms.map(_.blocks).sum,
       numPartitions = segParts,
       saltDfThreshold = config.saltDfThreshold,
       lang = config.lang.getOrElse(""),
       docmapMs = docmapMs, statsMs = statsMs, segmentsMs = segmentsMs,
       totalMs = (System.nanoTime() - t0) / 1000000,
       frontier = frontier,
-      sumDocLen = Some(sumDocLen))
+      sumDocLen = Some(sumDocLen),
+      stemming = Some(config.stemming))
     Manifest.writeBuild(spark, indexDir, m) // manifest LAST = build complete
     m
   }

@@ -1,7 +1,13 @@
 package lucy.index
 
+import scala.jdk.CollectionConverters._
+import scala.reflect.{ClassTag, classTag}
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Build-level manifest (SRC4; BASELINE.json:14 "resumable from
   * checkpoint with per-partition lineage + metrics").
@@ -23,53 +29,80 @@ case class BuildManifest(
       * into it (IncrementalIndexer.compact). Lets a lost `current`
       * pointer be recovered EXACTLY — re-including an already-compacted
       * delta would double-count df in CompositeIndex.termStats and shift
-      * idf (ADVICE r2). None/absent (pre-r3 manifests, plain batch
-      * builds) means "no deltas folded" (frontier −1).
+      * idf. None (plain batch builds, older manifests) means "no deltas
+      * folded" (frontier −1).
       */
+    @JsonDeserialize(contentAs = classOf[java.lang.Long]) // else small values box as Integer
     frontier: Option[Long] = None,
-    /** Exact Σ docLen over this part's docmap (r6): lets the composite
-      * view derive N/avgdl WITHOUT a corpus-wide shuffle — driver-side
+    /** Exact Σ docLen over this part's docmap: lets the composite view
+      * derive N/avgdl WITHOUT a corpus-wide shuffle — driver-side
       * winner correction over the (small) delta rows plus one probe
       * scan of the big part. docLen sums are exact Longs, and Spark's
       * avg over ints is the same sum/count double division while the
       * sum is below 2^53, so the derived avgdl is bit-equal to the agg
-      * in that regime. None (pre-r6 manifests) falls back to the
+      * in that regime. None (older manifests) falls back to the
       * aggregation path.
       */
-    sumDocLen: Option[Long] = None)
+    @JsonDeserialize(contentAs = classOf[java.lang.Long])
+    sumDocLen: Option[Long] = None,
+    /** The build's IndexConfig.stemming. Queries must be tokenized with
+      * the same flag (SearchableIndex.requireStemming); None (older
+      * manifests) is not checked.
+      */
+    stemming: Option[Boolean] = None)
 
 /** Per-partition lineage/metrics row for the segments stage. */
 case class PartitionManifest(partId: Int, blocks: Long, postings: Long,
                              bytes: Long, terms: Long,
                              minTermHash: Int, maxTermHash: Int)
 
-/** Manifest IO. Written/read as Spark JSON datasets — no extra JSON
-  * dependency, works on any Hadoop-visible filesystem, and the
-  * _SUCCESS marker from Spark's commit protocol doubles as the
-  * stage-completion flag (SURVEY.md §7.3 item 4: data committed
-  * atomically first, manifest written last; a missing manifest means
-  * the stage re-runs, which is idempotent because every stage output
-  * is a deterministic function of the input).
+/** The metadata commit protocol — the only code that knows it. Build
+  * manifests, partition manifests, the store's `current` pointer and its
+  * tombstone log are all records committed the same way:
+  *
+  *  - write: a record dir holds ONE JSON-lines data file (one object per
+  *    line, so `spark.read.json` reads it too), written first, then the
+  *    `_SUCCESS` marker. A crash before the marker leaves a torn dir that
+  *    every reader treats as absent.
+  *  - read: `_SUCCESS` present → parse the data file on the driver (a
+  *    small file open, no Spark job); absent → None.
+  *  - generations: a sequence of records lives in sibling dirs
+  *    `<prefix>-<n>`; only names with that exact prefix and a numeric
+  *    suffix count, so a stray dir never breaks a reader.
+  *
+  * Data is committed before its metadata (SURVEY.md §7.3 item 4): the
+  * Spark-written docmap, stats and segments stages each carry their own
+  * `_SUCCESS` ([[stageDone]]), and the build manifest is written LAST. A
+  * missing record means its stage re-runs, which is idempotent because
+  * every stage output is a deterministic function of the input.
   */
 object Manifest {
 
+  private val DataFile = "part-00000.json"
+
+  // None fields are omitted, so older readers and older lines agree
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+    .setDefaultPropertyInclusion(JsonInclude.Include.NON_ABSENT)
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   def stageDone(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
+    fsOf(spark, p).exists(p)
   }
 
-  /** Guard PARTIAL builds (ADVICE r1): a fingerprint marker is committed
-    * BEFORE any stage output, so re-running build() into a dir holding a
-    * crashed half-build of a DIFFERENT input refuses instead of silently
-    * resuming from stale docmap/stats/segments stages. (The completed-
-    * manifest fingerprint check only protects finished builds.)
-    * An empty requested fingerprint means the caller opted out of input
-    * identity (tests/ad-hoc) — resume is then allowed against anything.
+  /** Guard PARTIAL builds: a fingerprint marker is committed BEFORE any
+    * stage output, so re-running build() into a dir holding a crashed
+    * half-build of a DIFFERENT input refuses instead of silently resuming
+    * from stale docmap/stats/segments stages. (The completed-manifest
+    * fingerprint check only protects finished builds.) An empty requested
+    * fingerprint means the caller opted out of input identity (tests/ad
+    * hoc) — resume is then allowed against anything.
     */
   def claimFingerprint(spark: SparkSession, indexDir: String, fingerprint: String): Unit = {
     val p = new Path(s"$indexDir/meta/fingerprint")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, p)
     if (fs.exists(p)) {
       val in = fs.open(p)
       val existing =
@@ -85,121 +118,49 @@ object Manifest {
     }
   }
 
-  /** Commit a directory of JSON lines + _SUCCESS directly through the
-    * FileSystem API (r7): these metadata commits are a handful of tiny
-    * rows, and routing them through a Spark job cost a full
-    * schedule/launch/commit cycle per build — ~0.1–0.2 s apiece, paid
-    * once per delta put. Readers are unchanged (spark.read.json over
-    * the dir; _SUCCESS remains the stage-completion flag). The data
-    * file is written first and _SUCCESS last, preserving the
-    * torn-write-safe commit order of the Spark committer.
-    */
-  private def writeJsonDir(spark: SparkSession, dir: String, lines: Seq[String]): Unit = {
+  /** Commit `records` as the record dir `dir`: data file, then `_SUCCESS`. */
+  def write(spark: SparkSession, dir: String, records: Seq[AnyRef]): Unit = {
     val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, d)
     fs.delete(d, true)
     fs.mkdirs(d)
-    val out = fs.create(new Path(d, "part-00000.json"), true)
+    val out = fs.create(new Path(d, DataFile), true)
     try {
       val w = new java.io.OutputStreamWriter(out, java.nio.charset.StandardCharsets.UTF_8)
-      lines.foreach { l => w.write(l); w.write('\n') }
+      records.foreach { r => w.write(json.writeValueAsString(r)); w.write('\n') }
       w.flush()
     } finally out.close()
     fs.create(new Path(d, "_SUCCESS"), true).close()
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Double → JSON exactly as Jackson/Spark's JSON writer emits it
-    * (shortest round-trip repr), so a hand-written manifest is byte-
-    * compatible with what the r6 Spark-job writer produced.
-    */
-  private def jsonNum(d: Double): String = java.lang.Double.toString(d)
-
-  def writeBuild(spark: SparkSession, indexDir: String, m: BuildManifest): Unit = {
-    val fields = Seq(
-      s""""fingerprint":${jsonStr(m.fingerprint)}""",
-      s""""docs":${m.docs}""",
-      s""""avgdl":${jsonNum(m.avgdl)}""",
-      s""""postings":${m.postings}""",
-      s""""blocks":${m.blocks}""",
-      s""""numPartitions":${m.numPartitions}""",
-      s""""saltDfThreshold":${m.saltDfThreshold}""",
-      s""""lang":${jsonStr(m.lang)}""",
-      s""""docmapMs":${m.docmapMs}""",
-      s""""statsMs":${m.statsMs}""",
-      s""""segmentsMs":${m.segmentsMs}""",
-      s""""totalMs":${m.totalMs}""") ++
-      m.frontier.map(f => s""""frontier":$f""").toSeq ++
-      m.sumDocLen.map(s => s""""sumDocLen":$s""").toSeq
-    writeJsonDir(spark, s"$indexDir/meta/build", Seq(fields.mkString("{", ",", "}")))
-    val p = new Path(s"$indexDir/meta/build", "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    buildCache.put(indexDir, (fs.getFileStatus(p).getModificationTime, m))
+  /** The records of a committed dir; None while `_SUCCESS` is missing. */
+  def read[T: ClassTag](spark: SparkSession, dir: String): Option[Seq[T]] = {
+    val d = new Path(dir)
+    val fs = fsOf(spark, d)
+    if (!fs.exists(new Path(d, "_SUCCESS"))) return None
+    val in: java.io.InputStream = fs.open(new Path(d, DataFile))
+    try Some(json.readerFor(classTag[T].runtimeClass).readValues[T](in).readAll().asScala.toSeq)
+    finally in.close()
   }
 
-  /** Partition-manifest rows (schema of [[PartitionManifest]]) written
-    * the same direct-FS way; rows come pre-collected from the one
-    * aggregation job over segment metadata.
-    */
-  def writePartitionManifests(spark: SparkSession, dir: String,
-                              rows: Array[org.apache.spark.sql.Row]): Unit = {
-    val lines = rows.map { r =>
-      s"""{"partId":${r.getInt(r.fieldIndex("partId"))},""" +
-        s""""blocks":${r.getLong(r.fieldIndex("blocks"))},""" +
-        s""""postings":${r.getLong(r.fieldIndex("postings"))},""" +
-        s""""bytes":${r.getLong(r.fieldIndex("bytes"))},""" +
-        s""""terms":${r.getLong(r.fieldIndex("terms"))},""" +
-        s""""minTermHash":${r.getInt(r.fieldIndex("minTermHash"))},""" +
-        s""""maxTermHash":${r.getInt(r.fieldIndex("maxTermHash"))}}"""
-    }
-    writeJsonDir(spark, dir, lines.toSeq)
+  /** Ascending generation numbers n of the dirs `parentDir/<prefix>-<n>`. */
+  def generations(spark: SparkSession, parentDir: String, prefix: String): Seq[Long] = {
+    val dir = new Path(parentDir)
+    val fs = fsOf(spark, dir)
+    if (!fs.exists(dir)) return Seq.empty
+    fs.listStatus(dir).toSeq
+      .filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .filter(_.startsWith(prefix + "-"))
+      .flatMap(_.stripPrefix(prefix + "-").toLongOption)
+      .sorted
   }
 
-  // A COMPLETED build manifest is immutable (the dir is never rewritten
-  // — compaction commits NEW generation dirs), but it is re-read
-  // constantly: every composite-view assembly checks each delta's
-  // manifest and the fast corpus-stats path reads all of them — at one
-  // Spark JSON job apiece that was ~1 s of every live-store engine
-  // rebuild (r6). The cache replaces only the Spark JSON READ; the
-  // cheap _SUCCESS existence check still runs on EVERY call, so crash /
-  // wipe / resume semantics are exactly the uncached ones (a deleted
-  // meta/build is observed immediately — IndexBuilderSpec pins this —
-  // and absence is never cached: a mid-build dir's manifest appears
-  // later and must be seen).
-  // Cache entries carry the _SUCCESS modification time and are
-  // invalidated on mismatch (ADVICE r6 #2): a manifest rewritten
-  // out-of-band — another process, or delete+recreate with no
-  // readBuild during the gap — is now observed on the next read
-  // instead of served stale forever. One extra FS stat per read.
-  private val buildCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, BuildManifest)]()
+  def writeBuild(spark: SparkSession, indexDir: String, m: BuildManifest): Unit =
+    write(spark, s"$indexDir/meta/build", Seq(m))
 
-  def readBuild(spark: SparkSession, indexDir: String): Option[BuildManifest] = {
-    val p = new Path(s"$indexDir/meta/build", "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mtime =
-      try fs.getFileStatus(p).getModificationTime
-      catch { case _: java.io.FileNotFoundException =>
-        buildCache.remove(indexDir)
-        return None
-      }
-    Option(buildCache.get(indexDir)).filter(_._1 == mtime).map(_._2).orElse {
-      import spark.implicits._
-      val m = spark.read
-        .schema(implicitly[org.apache.spark.sql.Encoder[BuildManifest]].schema)
-        .json(s"$indexDir/meta/build").as[BuildManifest]
-        .collect().headOption
-      m.foreach(v => buildCache.put(indexDir, (mtime, v)))
-      m
-    }
-  }
+  def readBuild(spark: SparkSession, indexDir: String): Option[BuildManifest] =
+    read[BuildManifest](spark, s"$indexDir/meta/build").flatMap(_.headOption)
 
   /** Per-partition metrics derived from the committed segments — one
     * tiny aggregation job over block metadata columns only (column
@@ -214,6 +175,5 @@ object Manifest {
         count_distinct(col("term")).as("terms"),
         min(col("termHash")).as("minTermHash"),
         max(col("termHash")).as("maxTermHash"))
-      .withColumnRenamed("partId", "partId")
   }
 }

@@ -56,8 +56,4 @@ object Stats {
       .distinct()
       .orderBy(col("term")).limit(maxExpand)
       .collect().map(_.getString(0)).toSeq
-
-  /** A8 — vocabulary size (approximate for metrics display). */
-  def approxVocab(termTf: DataFrame): Long =
-    termTf.agg(approx_count_distinct(col("term")).as("v")).head().getLong(0)
 }

@@ -609,56 +609,27 @@ object Dedup {
   /** SimHash near-dup pairs within a Hamming radius, bucketed by the
     * four 16-bit chunks (a pair within distance ≤3 shares at least one
     * chunk — pigeonhole), so candidate generation is a groupBy join,
-    * not all-pairs.
+    * not all-pairs. These are exactly the tables of [[simhashPairsWide]]
+    * with numBlocks = 4: block i is bits [16i, 16i+16), one table per
+    * block; at maxHamming = 3 each table keys on its block alone.
     *
-    * Skew defenses mirror minhashLshCandidates (ADVICE/VERDICT r1): a
-    * 16-bit chunk bucket holds ~N/65536 docs at corpus size N, so at
-    * web scale the within-bucket pairing is quadratic — buckets larger
-    * than maxBucketSize are dropped (recall loss confined to mega-
-    * clusters, which `exact` dedup owns), and the self-join carries
-    * (chunkNo, chunk, id) only; sketches are re-attached after the
-    * pair distinct.
+    * Skew defenses mirror minhashLshCandidates: a 16-bit chunk bucket
+    * holds ~N/65536 docs at corpus size N, so at web scale the
+    * within-bucket pairing is quadratic — buckets larger than
+    * maxBucketSize are dropped (recall loss confined to mega-clusters,
+    * which `exact` dedup owns, and recorded in CapStats under opLabel).
     *
-    * CONTRACT (r5 soak, BENCH/BASELINE.md): narrow radius (≤ 3) and
-    * ≤ ~10⁷ docs — the fixed 16-bit chunks make within-bucket pairing
-    * grow as n²/65536 beyond that (measured 3.2× wall at 2× docs).
-    * Past either bound use [[simhashPairsWide]] (wider radius AND
-    * wider keys) or minhash (threshold semantics, recall 0.997 at the
-    * soak's mutation rate).
+    * CONTRACT (BENCH/BASELINE.md): narrow radius (≤ 3) and ≤ ~10⁷ docs —
+    * the fixed 16-bit chunks make within-bucket pairing grow as
+    * n²/65536 beyond that (measured 3.2× wall at 2× docs). Past either
+    * bound use [[simhashPairsWide]] with its default geometry (wider
+    * radius AND wider keys) or minhash (threshold semantics).
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3, maxBucketSize: Long = 10000,
                    idCol: String = "doc_id", textCol: String = "text",
-                   opLabel: String = "dedup_simhash",
-                   precomputedSims: Option[DataFrame] = None): DataFrame = {
+                   opLabel: String = "dedup_simhash"): DataFrame = {
     require(maxHamming <= 3, "chunk bucketing covers Hamming ≤ 3")
-    // sketch pass feeds chunking AND both Hamming re-attach joins —
-    // persist the narrow (id, simhash) frame so it runs once (r4).
-    // Callers running several sketch analyses over one corpus pass a
-    // shared (idCol, …, simhash) frame via precomputedSims (r7; caller-
-    // owned: not re-persisted, not released by releaseCaches).
-    val withSig = precomputedSims
-      .map(_.select(col(idCol), col("simhash")))
-      .getOrElse(persistTracked(
-        docs.select(col(idCol), TextAnalysis.simhashUdf(col(textCol)).as("simhash"))))
-    val chunked = withSig.select(col(idCol),
-      explode(array((0 until 4).map(i =>
-        struct(lit(i).as("chunkNo"),
-          shiftright(col("simhash"), i * 16).bitwiseAND(lit(0xFFFFL)).as("chunk"))): _*)).as("c"))
-      .select(col(idCol), col("c.chunkNo"), col("c.chunk"))
-    val cool = coolBuckets(chunked, idCol, Seq("chunkNo", "chunk"), maxBucketSize,
-      opLabel)
-    val l = cool.toDF("a", "chunkNo", "chunk")
-    val r = cool.toDF("b", "chunkNo", "chunk")
-    val hamming = udf((x: Long, y: Long) => java.lang.Long.bitCount(x ^ y))
-    l.join(r, Seq("chunkNo", "chunk"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .distinct()
-      .join(withSig.toDF("a", "simA"), Seq("a"))
-      .join(withSig.toDF("b", "simB"), Seq("b"))
-      .withColumn("hamming", hamming(col("simA"), col("simB")))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a"), col("b"), col("hamming"))
+    simhashPairsWide(docs, maxHamming, numBlocks = 4, maxBucketSize, idCol, textCol, opLabel)
   }
 
   /** All r-element combinations of (0 until m), lexicographic — the
@@ -714,11 +685,10 @@ object Dedup {
   def simhashPairsWide(docs: DataFrame, maxHamming: Int = 6, numBlocks: Int = 0,
                        maxBucketSize: Long = 10000,
                        idCol: String = "doc_id", textCol: String = "text",
-                       opLabel: String = "dedup_simhash_wide",
-                       precomputedSims: Option[DataFrame] = None): DataFrame = {
+                       opLabel: String = "dedup_simhash_wide"): DataFrame = {
     val m = if (numBlocks > 0) numBlocks else maxHamming + 3
     val r = m - maxHamming
-    require(maxHamming >= 1 && maxHamming < 64, s"maxHamming in [1,63], got $maxHamming")
+    require(maxHamming >= 0 && maxHamming < 64, s"maxHamming in [0,63], got $maxHamming")
     require(r >= 1, s"numBlocks ($m) must exceed maxHamming ($maxHamming)")
     require(m <= 64, s"numBlocks ($m) cannot exceed the 64 sketch bits")
     // count first (overflow-safe, capped): enumerating C(m, r) arrays
@@ -732,7 +702,6 @@ object Dedup {
     val combos = combinations(m, r)
     // block i covers bits [64*i/m, 64*(i+1)/m) — widths differ by <= 1
     val starts = Array.tabulate(m + 1)(i => 64 * i / m)
-    val sims = precomputedSims.map(_.select(col(idCol), col("simhash")))
     val tableKeys = udf((sim: Long) => {
       val out = new Array[Long](combos.length)
       var c = 0
@@ -751,8 +720,10 @@ object Dedup {
       }
       out
     })
-    val withSig = sims.getOrElse(persistTracked(
-      docs.select(col(idCol), TextAnalysis.simhashUdf(col(textCol)).as("simhash"))))
+    // the sketch pass feeds the keys AND both Hamming re-attach joins —
+    // persist the narrow (id, simhash) frame so it runs once
+    val withSig = persistTracked(
+      docs.select(col(idCol), TextAnalysis.simhashUdf(col(textCol)).as("simhash")))
     val keyed = withSig
       .select(col(idCol), posexplode(tableKeys(col("simhash"))).as(Seq("table", "key")))
     val cool = coolBuckets(keyed, idCol, Seq("table", "key"), maxBucketSize, opLabel)

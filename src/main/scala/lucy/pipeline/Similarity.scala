@@ -597,20 +597,11 @@ object Similarity {
     }
   }
 
-  /** The flat-IVF corpus-assignment UDF over a centroid model (shared
-    * by ivfCosineTopK and the BenchExtra isolation bench).
-    */
+  /** The flat-IVF corpus-assignment UDF over a centroid model. */
   def assignUdfFor(centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction = {
     val kernel = new CentroidKernel(centroids)
     udf((v: Array[Float]) => kernel.nearest(v))
   }
-
-  /** r6 assignment shape, kept ONLY for the BenchExtra before/after
-    * A/B; value-identical to assignUdfFor (CentroidKernel doc).
-    */
-  def assignUdfOld(centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((v: Array[Float]) =>
-      nearestList(normalize(v.toArray.map(_.toDouble)), centroids))
 
   /** IVF ANN: corpus partitioned into numLists coarse cells; a query
     * scores only the cells of its nprobe nearest centroids. Exact

@@ -22,9 +22,6 @@ object TextAnalysis {
     filter(split(lower(text), "[^a-z0-9]+"),
       t => t =!= "" && length(t) <= LucySpec.maxTokenLen)
 
-  def tokensNoStop(text: Column): Column =
-    filter(tokensCol(text), t => !t.isin(LucySpec.stopwords.toSeq: _*))
-
   /** doc → (n_tokens, n_stopwords, stopword_ratio, avg_token_len).
     * Stopword ratio is the workhorse of both langId and quality.
     */

@@ -24,6 +24,8 @@ import lucy.index.{CorpusStats, SearchableIndex, Stats, TermStats}
 class QueryEngine(spark: SparkSession, index: SearchableIndex,
                   stem: Boolean = LucySpec.stemming) {
 
+  index.requireStemming(spark, stem)
+
   lazy val stats: CorpusStats = index.corpusStats(spark)
   private val dfCache = TrieMap[String, Option[TermStats]]()
   // Gathered posting blocks per term (size-capped LRU; see BlockCache):

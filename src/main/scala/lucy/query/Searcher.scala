@@ -133,11 +133,13 @@ object Searcher {
   def search(spark: SparkSession, index: SearchableIndex, query: String,
              mode: QueryMode.Value = QueryMode.And,
              k: Int = LucySpec.defaultK,
-             stem: Boolean = LucySpec.stemming): DataFrame =
+             stem: Boolean = LucySpec.stemming): DataFrame = {
+    index.requireStemming(spark, stem)
     searchWith(spark, index.segments(spark), query, mode, k, index.corpusStats(spark),
       terms => index.lookupTerms(spark, terms),
       expand = (p, max) => Stats.expandPrefix(index.termStats(spark), p, max),
       tombstones = index.tombstoneIds, stem = stem)
+  }
 
   /** Search with externally supplied plan inputs. QueryEngine passes a
     * REUSED segments DataFrame and cached stats: re-creating the scan per

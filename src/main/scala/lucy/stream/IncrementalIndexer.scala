@@ -17,14 +17,23 @@ import lucy.index._
   * rootDir/
   *   base/gen-<G>/        full LucyIndex (gen-0 = initial batch build)
   *   deltas/delta-<id>/   one LucyIndex per micro-batch
-  *   current/             json pointer {gen, compactedThrough} — LAST
+  *   deletes/del-<n>/     tombstone log generation, one {docId} per line
+  *   current/p-<n>/       json pointer {gen, compactedThrough} — LAST
   * }}}
+  *
+  * Every metadata record here — the `current` pointer generations
+  * `current/p-<n>/`, the tombstone log `deletes/del-<n>/` and each part's
+  * build manifest — is committed and read through the one protocol in
+  * [[lucy.index.Manifest]]: JSON-lines data, then `_SUCCESS`; torn dirs
+  * read as absent; generation dirs listed by exact prefix. No Spark job
+  * runs on these paths.
   *
   * Exactly-once: delta dirs are named by batchId; a replayed batch finds
   * the completed manifest (fingerprint "delta-<id>") and is a no-op —
   * IndexBuilder's stage checkpoints make a half-written delta resume
-  * instead of duplicating. The `current` pointer is committed last, so a
-  * crash anywhere leaves a consistent view (SURVEY.md §7.3 item 4).
+  * instead of duplicating. The `current` pointer is committed LAST (and
+  * pruned to its two newest generations), so a crash anywhere leaves a
+  * consistent view (SURVEY.md §7.3 item 4).
   *
   * Watermark/late data (ST2): recrawls of a url landing in a later batch
   * are additive until compaction, where PF2 (latest warc_ts per url)
@@ -33,6 +42,9 @@ import lucy.index._
 object IncrementalIndexer {
 
   case class CurrentPointer(gen: Long, compactedThrough: Long)
+
+  /** One line of a tombstone log generation. */
+  case class Tombstone(docId: Long)
 
   def start(pagesStream: DataFrame, rootDir: String, checkpointDir: String,
             config: IndexConfig = IndexConfig()): StreamingQuery = {
@@ -86,43 +98,27 @@ object IncrementalIndexer {
 
   /** Register url deletions: docIds are the deterministic url hashes
     * (§8.5 — no lookup needed), committed as a generational tombstone
-    * log `deletes/del-<n>/` (same torn-write-safe scheme as the
-    * pointer). Idempotent: re-deleting is a no-op at read time
-    * (tombstones union + distinct). The mask holds until `compact()`
+    * log `deletes/del-<n>/`. Idempotent: re-deleting is a no-op at read
+    * time (tombstones union + distinct). The mask holds until `compact()`
     * physically purges the docs and clears the log; a later re-add of
     * the url then resurrects it.
     */
   def deleteUrls(spark: SparkSession, rootDir: String, urls: Seq[String]): Unit = {
-    import spark.implicits._
     if (urls.isEmpty) return
     val ids = urls.map(lucy.LucySpec.docIdForUrl).distinct.sorted
-    val next = deleteGens(spark, rootDir).maxOption.getOrElse(0L) + 1
-    ids.toDS().toDF("docId").coalesce(1)
-      .write.mode("overwrite").parquet(s"$rootDir/deletes/del-$next")
+    val next = Manifest.generations(spark, s"$rootDir/deletes", "del").maxOption.getOrElse(0L) + 1
+    Manifest.write(spark, s"$rootDir/deletes/del-$next", ids.map(Tombstone))
   }
 
   /** All registered tombstones (complete generations only), sorted. */
-  def readTombstones(spark: SparkSession, rootDir: String): Array[Long] = {
-    val gens = deleteGens(spark, rootDir)
-      .filter(g => Manifest.stageDone(spark, s"$rootDir/deletes/del-$g"))
-    if (gens.isEmpty) return Array.empty
-    gens.map(g => spark.read.parquet(s"$rootDir/deletes/del-$g"))
-      .reduce(_ unionByName _)
-      .select("docId").distinct()
-      .collect().map(_.getLong(0)).sorted
-  }
+  def readTombstones(spark: SparkSession, rootDir: String): Array[Long] =
+    tombstoneLog(spark, rootDir).flatMap(_._2).distinct.sorted.toArray
 
-  private def deleteGens(spark: SparkSession, rootDir: String): Seq[Long] = {
-    val dir = new Path(s"$rootDir/deletes")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("del-"))
-      .flatMap(n => n.stripPrefix("del-").toLongOption)
-      .sorted
-  }
+  /** Committed tombstone generations with their docIds, ascending. */
+  private def tombstoneLog(spark: SparkSession, rootDir: String): Seq[(Long, Seq[Long])] =
+    Manifest.generations(spark, s"$rootDir/deletes", "del").flatMap { g =>
+      Manifest.read[Tombstone](spark, s"$rootDir/deletes/del-$g").map(ts => g -> ts.map(_.docId))
+    }
 
   /** Sort-merge compaction (SURVEY.md §2.5 J5, §3.3 step 4): decode all
     * live parts' postings, keep only each doc's LATEST version (PF2 at
@@ -145,9 +141,8 @@ object IncrementalIndexer {
     // tombstones registered up to now are purged by this compaction:
     // their docs drop out of winners (and thus postings), and the log
     // generations read here are cleared after the pointer commits
-    val purgeGens = deleteGens(spark, rootDir)
-      .filter(g => Manifest.stageDone(spark, s"$rootDir/deletes/del-$g"))
-    val tombstones = readTombstones(spark, rootDir)
+    val log = tombstoneLog(spark, rootDir)
+    val tombstones = log.flatMap(_._2).distinct
 
     val tagged = parts.zipWithIndex.map { case (p, i) =>
       p.docmap(spark).withColumn("srcIdx", lit(i))
@@ -166,7 +161,7 @@ object IncrementalIndexer {
     val winners =
       (if (tombstones.isEmpty) winnersAll
        else winnersAll.join(
-         broadcast(tombstones.toSeq.toDF("docId")), Seq("docId"), "left_anti"))
+         broadcast(tombstones.toDF("docId")), Seq("docId"), "left_anti"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val postings = parts.zipWithIndex.map { case (p, i) =>
@@ -198,107 +193,55 @@ object IncrementalIndexer {
     // purge the tombstone log generations this compaction applied (after
     // the pointer commit: a crash before this point just re-applies them)
     val fs = new Path(rootDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    purgeGens.foreach(g => fs.delete(new Path(s"$rootDir/deletes/del-$g"), true))
+    log.foreach { case (g, _) => fs.delete(new Path(s"$rootDir/deletes/del-$g"), true) }
     m
   }
 
-  // ---- current-pointer IO (ADVICE r1: generation-numbered pointer
-  // dirs, never overwrite-in-place — an overwrite deletes the old
-  // pointer before the new one commits, so a crash in the window (or a
-  // concurrent reader) would see NO pointer and silently serve deltas
-  // without the base. Writers commit current/p-<n+1>/ and then prune to
-  // the two highest; readers take the highest _SUCCESS'd generation.) ---
-
-  private def pointerGens(spark: SparkSession, rootDir: String): Seq[Long] = {
-    val dir = new Path(s"$rootDir/current")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("p-"))
-      .flatMap(n => n.stripPrefix("p-").toLongOption)
-      .sorted
-  }
+  // ---- current pointer: generation-numbered dirs, never overwritten in
+  // place — an overwrite deletes the old pointer before the new one
+  // commits, so a crash in the window (or a concurrent reader) would see
+  // NO pointer and silently serve deltas without the base. Writers commit
+  // current/p-<n+1>/ and then prune to the two highest; readers take the
+  // highest committed generation. ---
 
   private def writeCurrent(spark: SparkSession, rootDir: String, c: CurrentPointer): Unit = {
-    val next = pointerGens(spark, rootDir).maxOption.getOrElse(0L) + 1
-    // direct-FS commit (r7): two longs do not need a Spark job; the
-    // data-then-_SUCCESS order matches the Spark committer's (see
-    // Manifest.writeJsonDir rationale). Readers unchanged.
-    val dir = new Path(s"$rootDir/current/p-$next")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(dir, true)
-    fs.mkdirs(dir)
-    val out = fs.create(new Path(dir, "part-00000.json"), true)
-    try out.write(
-      s"""{"gen":${c.gen},"compactedThrough":${c.compactedThrough}}\n"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    fs.create(new Path(dir, "_SUCCESS"), true).close()
-    // prune: keep the two highest generations (the new one + one fallback)
-    pointerGens(spark, rootDir).dropRight(2)
-      .foreach(g => fs.delete(new Path(s"$rootDir/current/p-$g"), true))
+    val gens = Manifest.generations(spark, s"$rootDir/current", "p")
+    val next = gens.maxOption.getOrElse(0L) + 1
+    Manifest.write(spark, s"$rootDir/current/p-$next", Seq(c))
+    val fs = new Path(rootDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (gens :+ next).dropRight(2).foreach(g => fs.delete(new Path(s"$rootDir/current/p-$g"), true))
   }
 
-  def readCurrent(spark: SparkSession, rootDir: String): Option[CurrentPointer] = {
-    import spark.implicits._
-    val complete = pointerGens(spark, rootDir)
-      .filter(g => Manifest.stageDone(spark, s"$rootDir/current/p-$g"))
-    complete.lastOption.flatMap { g =>
-      spark.read
-        .schema(implicitly[org.apache.spark.sql.Encoder[CurrentPointer]].schema)
-        .json(s"$rootDir/current/p-$g").as[CurrentPointer].collect().headOption
-    }
-  }
+  def readCurrent(spark: SparkSession, rootDir: String): Option[CurrentPointer] =
+    Manifest.generations(spark, s"$rootDir/current", "p").reverseIterator
+      .flatMap(g => Manifest.read[CurrentPointer](spark, s"$rootDir/current/p-$g"))
+      .nextOption().flatMap(_.headOption)
 
-  /** Last-resort recovery (ADVICE r1): no readable pointer (e.g. the
-    * pointer dir was lost) but committed base generations exist — serve
-    * the highest base with a manifest rather than silently dropping the
-    * base. compactedThrough comes from the base's OWN manifest frontier
-    * (recorded at compaction, ADVICE r2), so already-folded deltas are
-    * NOT re-included: re-inclusion would double-count their df in
+  /** Last-resort recovery: no readable pointer (e.g. the pointer dir was
+    * lost) but committed base generations exist — serve the highest base
+    * with a manifest rather than silently dropping the base.
+    * compactedThrough comes from the base's OWN manifest frontier
+    * (recorded at compaction), so already-folded deltas are NOT
+    * re-included: re-inclusion would double-count their df in
     * CompositeIndex.termStats and shift idf even though each doc is
-    * scored once. Pre-frontier manifests (no field) recover with −1 —
-    * results are then still dedup'd per doc but idf is inexact until
-    * the next compact (the old documented behavior).
+    * scored once. Manifests without a frontier recover with −1 — results
+    * are then still dedup'd per doc but idf is inexact until the next
+    * compact.
     */
-  private def recoverPointer(spark: SparkSession, rootDir: String): Option[CurrentPointer] = {
-    val dir = new Path(s"$rootDir/base")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return None
-    fs.listStatus(dir).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        st.getPath.getName.stripPrefix("gen-").toLongOption.flatMap { g =>
-          LucyIndex(st.getPath.toString).manifest(spark)
-            .map(m => CurrentPointer(g, m.frontier.getOrElse(-1L)))
-        }
-      }
-      .maxByOption(_.gen)
-  }
+  private def recoverPointer(spark: SparkSession, rootDir: String): Option[CurrentPointer] =
+    Manifest.generations(spark, s"$rootDir/base", "gen").reverseIterator
+      .flatMap(g => Manifest.readBuild(spark, s"$rootDir/base/gen-$g")
+        .map(m => CurrentPointer(g, m.frontier.getOrElse(-1L))))
+      .nextOption()
 
   private def currentOrRecovered(spark: SparkSession, rootDir: String): Option[CurrentPointer] =
     readCurrent(spark, rootDir).orElse(recoverPointer(spark, rootDir))
 
   /** Completed deltas (manifest present), ascending by batch id. */
-  def listDeltas(spark: SparkSession, rootDir: String): Seq[(Long, LucyIndex)] = {
-    val dir = new Path(s"$rootDir/deltas")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("delta-")) None
-        else {
-          val id = name.stripPrefix("delta-").toLong
-          val idx = LucyIndex(st.getPath.toString)
-          if (idx.manifest(spark).isDefined) Some(id -> idx) else None
-        }
-      }
-      .sortBy(_._1)
-  }
+  def listDeltas(spark: SparkSession, rootDir: String): Seq[(Long, LucyIndex)] =
+    Manifest.generations(spark, s"$rootDir/deltas", "delta")
+      .map(id => id -> LucyIndex(s"$rootDir/deltas/delta-$id"))
+      .filter { case (_, idx) => Manifest.stageDone(spark, s"${idx.dir}/meta/build") }
 
   /** Bootstrap: promote an initial batch build to base/gen-0. */
   def bootstrap(pages: DataFrame, rootDir: String,

@@ -76,6 +76,21 @@ class StemmedRankIdentitySpec extends SparkFunSuite {
       stem = false).collect().isEmpty, "unstemmed query form must miss the stemmed index")
   }
 
+  test("searching the stemmed index unstemmed fails loudly, naming the dir and both flags") {
+    val (index, _, _, _, _) = env
+    assert(index.manifest(spark).get.stemming === Some(true))
+    val calls = Seq[(String, () => Any)](
+      "Searcher.search" -> (() => Searcher.search(spark, index, "shuffle", QueryMode.And, 10,
+        stem = false)),
+      "QueryEngine" -> (() => new QueryEngine(spark, CompositeIndex(Seq(index)), stem = false)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(index.dir), name)
+      assert(e.getMessage.contains("stemming=true") && e.getMessage.contains("stemming=false"), name)
+    }
+    new QueryEngine(spark, index, stem = true) // the matching flag passes
+  }
+
   test("naive engine (stemming=true) is rank-identical to the stem goldens") {
     val (_, termTf, tokPos, docmap, stats) = env
     QuerySet.reference.foreach { q =>

@@ -263,6 +263,12 @@ class IncrementalSpec extends SparkFunSuite {
     val gens = fs.listStatus(new Path(s"$root/current")).map(_.getPath.getName)
     assert(gens.length <= 2, s"old pointer generations must be pruned: ${gens.mkString(",")}")
 
+    // stray dirs are not generations: a non-numeric delta dir and a base
+    // dir without the gen- prefix (even one holding a manifest) are ignored
+    fs.mkdirs(new Path(s"$root/deltas/delta-tmp"))
+    Manifest.writeBuild(spark, s"$root/base/7", LucyIndex(s"$root/base/gen-1").manifest(spark).get)
+    assert(IncrementalIndexer.listDeltas(spark, root).map(_._1) === Seq(0L))
+
     // pointer dir lost entirely → composite recovers the highest base gen
     fs.delete(new Path(s"$root/current"), true)
     assert(IncrementalIndexer.readCurrent(spark, root) === None)
