@@ -21,12 +21,12 @@ case class IndexConfig(
       * compaction (PF2), not the ingest filter.
       */
     streamDedupWatermark: Option[String] = None,
-    /** §8.7 r3: Porter-stem tokens after the stopword/length filters.
+    /** §8.7: Porter-stem tokens after the stopword/length filters.
       * Frozen OFF by LucySpec; a reconciliation event flips the LucySpec
-      * val and every default follows. Query-side tokenization must use
-      * the same flag (Searcher/QueryEngine stem parameter) — the
-      * stemming-ON golden set + StemmedRankIdentitySpec prove the flip
-      * end-to-end.
+      * val and every default follows. The build manifest records the
+      * flag and the query path tokenizes with it
+      * (SearchableIndex.stemming) — the stemming-ON golden set +
+      * StemmedRankIdentitySpec prove the flip end-to-end.
       */
     stemming: Boolean = lucy.LucySpec.stemming)
 
@@ -59,15 +59,19 @@ trait SearchableIndex {
   /** The physical index directories behind this view. */
   def parts: Seq[LucyIndex]
 
-  /** Fails loudly when a part was built with a different stemming flag
-    * than `stem`, the flag queries are tokenized with: the mismatch
-    * would otherwise silently miss every inflected term. Parts whose
-    * manifest does not record the flag are not checked.
+  /** The stemming flag the parts were built with, as their build
+    * manifests record it; a manifest without the field counts as
+    * LucySpec.stemming. Query tokens must be stemmed iff corpus tokens
+    * were, so parts that disagree fail loudly here instead of silently
+    * missing every inflected term in one of them.
     */
-  def requireStemming(spark: SparkSession, stem: Boolean): Unit =
-    for (p <- parts; built <- p.manifest(spark).flatMap(_.stemming) if built != stem)
-      throw new IllegalArgumentException(s"index ${p.dir} was built with " +
-        s"stemming=$built but is searched with stemming=$stem; search with the build's flag")
+  def stemming(spark: SparkSession): Boolean = {
+    val byFlag = parts.groupBy(_.manifest(spark).flatMap(_.stemming).getOrElse(lucy.LucySpec.stemming))
+    require(byFlag.size == 1, "index parts disagree on stemming: " + byFlag.toSeq.sortBy(!_._1)
+      .map { case (f, ps) => s"stemming=$f in ${ps.map(_.dir).mkString(", ")}" }
+      .mkString("; ") + "; rebuild them with one flag")
+    byFlag.keys.head
+  }
 }
 
 /** On-disk index layout:

@@ -45,9 +45,9 @@ case class BuildManifest(
       */
     @JsonDeserialize(contentAs = classOf[java.lang.Long])
     sumDocLen: Option[Long] = None,
-    /** The build's IndexConfig.stemming. Queries must be tokenized with
-      * the same flag (SearchableIndex.requireStemming); None (older
-      * manifests) is not checked.
+    /** The build's IndexConfig.stemming, which queries are tokenized
+      * with (SearchableIndex.stemming); None (older manifests) reads as
+      * LucySpec.stemming.
       */
     stemming: Option[Boolean] = None)
 

@@ -144,15 +144,4 @@ object NaiveSearch {
       prefixSearch(termTf, docmap, stats, query, k, LucySpec.maxPrefixExpand, stem)
     case m                => search(termTf, docmap, stats, query, m, k, stem)
   }
-
-  /** J4 — join top-k back to display columns. k is tiny: isin filter on
-    * the docmap, no shuffle of the big side.
-    */
-  def withUrls(topk: DataFrame, docmap: DataFrame): DataFrame = {
-    val ids = topk.select("docId").collect().map(_.getLong(0))
-    if (ids.isEmpty) return topk.withColumn("url", lit(null: String))
-    topk.join(broadcast(docmap.filter(col("docId").isin(ids.map(_.asInstanceOf[Any]): _*))
-      .select(col("docId"), col("url"))), Seq("docId"), "left")
-      .orderBy(col("score").desc, col("docId").asc)
-  }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import lucy.Hashing
 import lucy.fixtures.PagesGen
-import lucy.index.{IndexBuilder, IndexConfig, Ingest, LucyIndex, Stats}
-import lucy.query.{QueryMode, Searcher}
+import lucy.index.{IndexBuilder, IndexConfig, Ingest, LucyIndex}
+import lucy.query.{QueryEngine, QueryMode}
 
 /** Regenerates PLANS.md — the physical-plan evidence document — from a
   * 5000-doc index at local[8]. Run whenever the plan-shaping code
@@ -26,7 +26,6 @@ object CapturePlans {
     val dir = "/tmp/plans-idx-v2"
     IndexBuilder.build(PagesGen.pages(spark, 5000), dir)
     val index = LucyIndex(dir)
-    val segments = index.segments(spark)
 
     def planOf(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -74,16 +73,15 @@ object CapturePlans {
          |""".stripMargin)
 
     // PLAN1: metadata-only pruned scan
-    val p1 = segments
+    val p1 = index.segments(spark)
       .filter(col("termHash") === Hashing.termHash("varint") && col("term") === "varint")
       .select(col("term"), col("count"), col("firstDocId"))
     sb.append("\n```\n=====PLAN1: pruned segment scan (termHash pushdown, posVarint pruned away)\n")
     sb.append(planOf(p1))
 
     // PLAN2: distributed bucket-exchange query (forced)
-    val p2 = Searcher.searchWith(spark, segments, "spark shuffle", QueryMode.And, 10,
-      index.corpusStats(spark), ts => Stats.lookupTerms(index.termStats(spark), ts),
-      gatherMaxPostings = 0L)
+    val forced = new QueryEngine(spark, index, gatherMaxPostings = 0L)
+    val p2 = forced.search("spark shuffle", QueryMode.And, 10)
     sb.append("\n=====PLAN2: distributed query (pruned scan -> bucket exchange -> WAND -> TakeOrdered)\n")
     sb.append(planOf(p2))
 
@@ -98,9 +96,7 @@ object CapturePlans {
     sb.append(planOf(p3))
 
     // PLAN4: phrase query distributed (posVarint read)
-    val p4 = Searcher.searchWith(spark, segments, "spark shuffle", QueryMode.Phrase, 10,
-      index.corpusStats(spark), ts => Stats.lookupTerms(index.termStats(spark), ts),
-      gatherMaxPostings = 0L)
+    val p4 = forced.search("spark shuffle", QueryMode.Phrase, 10)
     sb.append("\n=====PLAN4: phrase query (positions column in ReadSchema)\n")
     sb.append(planOf(p4))
 
@@ -113,10 +109,8 @@ object CapturePlans {
     val dir2 = "/tmp/plans-idx-bench-v2"
     IndexBuilder.build(PagesGen.pages(spark, 270000, 16), dir2,
       IndexConfig(saltDfThreshold = 1L << 16, maxSalts = 16))
-    val index2 = LucyIndex(dir2)
-    val p2b = Searcher.searchWith(spark, index2.segments(spark),
-      "spark shuffle index posting query", QueryMode.And, 10,
-      index2.corpusStats(spark), ts => Stats.lookupTerms(index2.termStats(spark), ts))
+    val p2b = new QueryEngine(spark, LucyIndex(dir2))
+      .search("spark shuffle index posting query", QueryMode.And, 10)
     sb.append("\n=====PLAN2b: bucket exchange at bench scale (270k docs, and_head5x, natural routing)\n")
     sb.append(planOf(p2b))
 

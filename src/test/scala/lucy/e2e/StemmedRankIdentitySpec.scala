@@ -9,9 +9,10 @@ import lucy.query._
 /** Stemming-ON rank identity (§8.7 r3; VERDICT r2 #6): the frozen
   * default is stemming=false, but SURVEY.md §0.1 reconciliation may
   * demand a flip. This spec proves the flip is already wired end-to-end:
-  * the Porter-stemmed pipeline (IndexConfig.stemming=true + the stem
-  * query flag) reproduces the committed golden_queries_stem.json for
-  * BOTH engines on the same frozen corpus and query set — so
+  * the Porter-stemmed pipeline (IndexConfig.stemming=true, which the
+  * query path reads back from the build manifest) reproduces the
+  * committed golden_queries_stem.json for BOTH engines on the same
+  * frozen corpus and query set — so
   * reconciliation is one LucySpec val change plus zero code.
   */
 class StemmedRankIdentitySpec extends SparkFunSuite {
@@ -69,26 +70,29 @@ class StemmedRankIdentitySpec extends SparkFunSuite {
     val b = NaiveSearch.search(termTf, docmap, stats, "shuffle", QueryMode.And, 10, stem = true)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(a.nonEmpty && a.toSeq === b.toSeq)
-    val fast = Searcher.search(spark, index, "shuffling", QueryMode.And, 10, stem = true)
+    val fast = Searcher.search(spark, index, "shuffling", QueryMode.And, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(fast.toSeq === a.toSeq)
     assert(NaiveSearch.search(termTf, docmap, stats, "shuffling", QueryMode.And, 10,
       stem = false).collect().isEmpty, "unstemmed query form must miss the stemmed index")
   }
 
-  test("searching the stemmed index unstemmed fails loudly, naming the dir and both flags") {
+  test("mixed-flag composite fails naming dirs and flags") {
     val (index, _, _, _, _) = env
-    assert(index.manifest(spark).get.stemming === Some(true))
+    // the stemmed index searches stemmed without being told to
+    assert(index.stemming(spark))
+    new QueryEngine(spark, index)
+    val plainDir = Files.createTempDirectory("lucy-rank-plain").toString + "/idx"
+    IndexBuilder.build(PagesGen.pages(spark, 20), plainDir)
+    val mixed = CompositeIndex(Seq(index, LucyIndex(plainDir)))
     val calls = Seq[(String, () => Any)](
-      "Searcher.search" -> (() => Searcher.search(spark, index, "shuffle", QueryMode.And, 10,
-        stem = false)),
-      "QueryEngine" -> (() => new QueryEngine(spark, CompositeIndex(Seq(index)), stem = false)))
+      "Searcher.search" -> (() => Searcher.search(spark, mixed, "shuffle", QueryMode.And, 10)),
+      "QueryEngine" -> (() => new QueryEngine(spark, mixed)))
     calls.foreach { case (name, call) =>
       val e = intercept[IllegalArgumentException](call())
-      assert(e.getMessage.contains(index.dir), name)
-      assert(e.getMessage.contains("stemming=true") && e.getMessage.contains("stemming=false"), name)
+      assert(e.getMessage.contains(s"stemming=true in ${index.dir}"), name)
+      assert(e.getMessage.contains(s"stemming=false in $plainDir"), name)
     }
-    new QueryEngine(spark, index, stem = true) // the matching flag passes
   }
 
   test("naive engine (stemming=true) is rank-identical to the stem goldens") {
@@ -105,7 +109,7 @@ class StemmedRankIdentitySpec extends SparkFunSuite {
   test("WAND fast path (stemmed index + stemmed queries) is rank-identical to the stem goldens") {
     val (index, _, _, _, _) = env
     QuerySet.reference.foreach { q =>
-      val got = Searcher.search(spark, index, q.query, q.mode, q.k, stem = true)
+      val got = Searcher.search(spark, index, q.query, q.mode, q.k)
         .collect().map(r => GoldenHit(r.getLong(0),
           java.lang.Double.doubleToLongBits(r.getDouble(1)), r.getInt(2)))
       assert(got.toSeq === goldens(q.id).hits.toSeq, s"wand-stem ${q.id}")

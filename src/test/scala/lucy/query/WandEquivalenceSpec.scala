@@ -79,9 +79,7 @@ class WandEquivalenceSpec extends SparkFunSuite {
     */
   private def searchForced(index: LucyIndex, q: String, m: QueryMode.Value, k: Int,
                            gatherMax: Long): DataFrame =
-    Searcher.searchWith(spark, index.segments(spark), q, m, k, index.corpusStats(spark),
-      ts => Stats.lookupTerms(index.termStats(spark), ts), gatherMax,
-      expand = (p, max) => Stats.expandPrefix(index.termStats(spark), p, max))
+    new QueryEngine(spark, index, gatherMaxPostings = gatherMax).search(q, m, k)
 
   test("WAND == naive on a 600-doc corpus (unsalted), all execution shapes") {
     val env = buildBoth(600, IndexConfig(), "unsalted")
@@ -223,10 +221,7 @@ class WandEquivalenceSpec extends SparkFunSuite {
       "prefix ceiling (default, exact)")
 
     def searchCeil(idx: SearchableIndex, ceiling: Int) =
-      Searcher.searchWith(spark, idx.segments(spark), "zz", QueryMode.Prefix, 150,
-        idx.corpusStats(spark), terms => idx.lookupTerms(spark, terms),
-        expand = (p, max) => Stats.expandPrefix(idx.termStats(spark), p, max),
-        tombstones = idx.tombstoneIds, expandCeiling = ceiling)
+      new QueryEngine(spark, idx, expandCeiling = ceiling).search("zz", QueryMode.Prefix, 150)
 
     // ceiling 256: partial result = survivors within the first 256 raw
     // slots, which score exactly like the OR query over those six terms

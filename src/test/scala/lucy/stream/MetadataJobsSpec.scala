@@ -1,10 +1,7 @@
 package lucy.stream
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
-import org.apache.spark.lucytest.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import lucy.SparkFunSuite
 import lucy.fixtures.PagesGen
 import lucy.index._
@@ -15,32 +12,6 @@ import lucy.index._
 class MetadataJobsSpec extends SparkFunSuite {
 
   private lazy val tmp = Files.createTempDirectory("lucy-meta-jobs").toString
-  private val TagKey = "lucy.test.jobTag"
-
-  /** Runs `body` and counts the Spark jobs it started from this thread
-    * (tagged through a local property, so jobs of other threads — e.g. a
-    * store's warm-behind — never count). The listener bus is drained
-    * before the count is read.
-    */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(TagKey) == tag)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(TagKey, tag)
-    try {
-      val r = body
-      ListenerBus.drain(sc)
-      (r, jobs.get)
-    } finally {
-      sc.setLocalProperty(TagKey, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("store metadata calls run zero Spark jobs: delete, composite view, pointer, tombstones, deltas") {
     import spark.implicits._
