@@ -8,23 +8,20 @@ import lucy.stream.IncrementalIndexer
 /** The lucy.js user-facing surface, whole: a mutable document store with
   * a live full-text index. lucy.js hooks IndexedDB `put/add/delete` and
   * answers `search()` against the in-memory inverted index; this is the
-  * cluster-scale equivalent over the delta/tombstone/compaction machinery
+  * cluster-scale equivalent over the delta/mask/compaction machinery
   * (SURVEY.md §3.3, §8.7):
   *
-  *   - `put(pages)`   — add or update documents (url-keyed; latest
-  *     warc_ts wins at compaction) → one delta index, exactly-once by
-  *     the caller-supplied batch id.
-  *   - `delete(urls)` — tombstone documents; masked immediately, purged
-  *     at the next `compact()`.
+  *   - `put(pages)`   — add or replace documents (url-keyed: the latest
+  *     warc_ts wins) → one delta index plus masks on the versions it
+  *     replaced, exactly-once by the caller-supplied batch id.
+  *   - `delete(urls)` — mask the urls' live versions; a later put adds
+  *     them again.
   *   - `search(q)`    — top-k BM25 (And/Or/Phrase/Prefix) over the live
-  *     view. EXACT (bit-equal to a from-scratch index of the current
-  *     contents) for pure adds and deletes; for a url UPDATED between
-  *     compactions the index is additive (CompositeIndex docs: the doc
-  *     is scored once, against its latest version's tf, but stale
-  *     postings of terms dropped by the update may still match until
-  *     the merge) — `compact()` restores exactness (ADVICE r2;
-  *     LucyStoreSpec probes both regimes).
-  *   - `compact()`    — fold deltas + deletes into a new base generation.
+  *     view, BIT-EQUAL to a from-scratch index of the store's current
+  *     contents after any sequence of puts and deletes: the view holds
+  *     exactly one unmasked version of each live url (IncrementalIndexer).
+  *   - `compact()`    — fold the parts' unmasked rows into a new base
+  *     generation; answers do not change.
   *
   * A serving QueryEngine (block cache + stats cache) is rebuilt whenever
   * the underlying view changes — mutation invalidates, reads are warm in
@@ -90,7 +87,7 @@ final class LucyStore(spark: SparkSession, rootDir: String,
       warmedParts.getOrElseUpdate(d, {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         Seq(s"$d/segments", s"$d/stats/terms", s"$d/docmap")
-          .map(p => spark.read.parquet(p).persist(MEMORY_AND_DISK))
+          .map(p => lucy.index.LucyIndex.read(spark, p).persist(MEMORY_AND_DISK))
       })
     }
   }
@@ -106,7 +103,7 @@ final class LucyStore(spark: SparkSession, rootDir: String,
   }
 
   // Warm-BEHIND: after every mutation the next engine's one-time costs
-  // — composite corpus stats, the new delta's relation caches — are
+  // — the relations' file listing and footers, the new delta's caches — are
   // paid on a background daemon thread, so the first post-mutation
   // search finds a warm engine instead of paying them inline (lucy.js
   // updates its in-memory index ON put; this is the async cluster
@@ -126,8 +123,8 @@ final class LucyStore(spark: SparkSession, rootDir: String,
           warmQueued.set(false) // before the work: a mutation mid-warm re-queues
           try {
             val e = engine
-            // composite corpus stats, then the relation-level one-time
-            // costs (file listing, parquet footers, union-plan analysis)
+            // corpus stats (manifest arithmetic), then the relation-level
+            // one-time costs (file listing, parquet footers, union-plan analysis)
             // via pruned no-data probes: with the warm given think-time
             // to finish, the first live search costs the same as a
             // steady one. Deliberately SEQUENTIAL: under FIFO
@@ -164,7 +161,7 @@ final class LucyStore(spark: SparkSession, rootDir: String,
     synchronized { engineCache = None }
   }
 
-  /** The current searchable view (base + deltas, tombstone-masked). */
+  /** The current searchable view (base + deltas, masked). */
   def view: SearchableIndex = IncrementalIndexer.composite(spark, rootDir)
 
   /** Bootstrap the store from an initial corpus (no-op analog: an empty
@@ -175,15 +172,15 @@ final class LucyStore(spark: SparkSession, rootDir: String,
     invalidate(); m
   }
 
-  /** Add/update documents. batchId is the exactly-once key: re-putting
-    * the same id is a no-op (a replaying upstream is safe).
+  /** Add or replace documents. batchId is the exactly-once key:
+    * re-putting the same id is a no-op (a replaying upstream is safe).
     */
   def put(pages: DataFrame, batchId: Long): Unit = {
     IncrementalIndexer.indexBatch(pages, rootDir, batchId, config)
     invalidate()
   }
 
-  /** Delete documents by url (tombstoned until the next compact). */
+  /** Delete documents by url. */
   def delete(urls: Seq[String]): Unit = {
     IncrementalIndexer.deleteUrls(spark, rootDir, urls)
     invalidate()

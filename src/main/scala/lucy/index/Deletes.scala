@@ -3,107 +3,99 @@ package lucy.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Document deletion — the lucy.js `delete()` hook analog (SURVEY.md
-  * §1.1: the reference keeps its index live under put/add/delete; adds
-  * and updates are deltas + compaction, deletes are tombstones).
+/** Masked documents — the lucy.js `delete()` hook analog (SURVEY.md
+  * §1.1), and the read side of every update: an update is a delete of
+  * the old version plus an add of the new one.
   *
-  * Semantics (v1, exact): a tombstoned docId is masked EVERYWHERE in
-  * the wrapped index until the next compaction physically purges it.
-  * Query results are BIT-EQUAL to the naive engine over the surviving
-  * corpus — which requires more than hiding docs:
+  * A view names its dead (part, docId) pairs per part
+  * (`SearchableIndex.masks`), and a search over it is BIT-EQUAL to the
+  * naive engine over the live documents only:
   *
-  *  - N and avgdl come from an aggregation over the SURVIVING docmap
-  *    (same `agg(count, avg(docLen))` shape the builder uses, so the
-  *    Double is the same exact long-sum/count division);
-  *  - df per query term is the raw index df MINUS the term's postings
-  *    that fall in the tombstone set (`deletedDf`: a pruned scan of the
-  *    query terms' blocks only — never a corpus scan);
-  *  - the WAND kernel skips tombstoned candidates before they can take
-  *    a heap slot.
+  *  - N and avgdl exclude the dead docs (`SearchableIndex.totals`);
+  *  - df per query term is the raw index df MINUS the term's postings in
+  *    dead pairs (`deletedDf`: a pruned scan of the query terms' blocks
+  *    only — never a corpus scan);
+  *  - a WAND cursor over a part never lands on that part's dead docIds.
   *
-  * Re-adding a deleted url is supported after a compaction (the
-  * tombstone is purged with the doc); between delete and compaction the
-  * tombstone wins. The sorted docId array ships in the query plan's
-  * task closure — bounded by `maxTombstones`; a store accumulating more
-  * deletes than that must compact first (the Lucene deleted-docs-ratio
-  * analog).
+  * The masks ship in the query plan's task closure; compaction drops
+  * the dead rows physically and the masks with them.
   */
-case class TombstonedIndex(inner: SearchableIndex, override val tombstoneIds: Array[Long])
+case class TombstonedIndex(inner: SearchableIndex, tombstoneIds: Array[Long])
     extends SearchableIndex {
-  require(Deletes.isSorted(tombstoneIds), "tombstoneIds must be sorted ascending")
+  require(tombstoneIds.indices.drop(1).forall(i => tombstoneIds(i - 1) < tombstoneIds(i)),
+    "tombstoneIds must be sorted ascending")
   require(tombstoneIds.length <= Deletes.maxTombstones,
     s"${tombstoneIds.length} tombstones exceed ${Deletes.maxTombstones}: compact first")
 
   def parts: Seq[LucyIndex] = inner.parts
 
-  def segments(spark: SparkSession): DataFrame = inner.segments(spark)
+  /** The ids are dead in every part, on top of the inner masks. */
+  lazy val masks: Seq[Array[Long]] = inner.masks.map(m =>
+    if (m.isEmpty) tombstoneIds else (m ++ tombstoneIds).distinct.sorted)
 
-  def docmap(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val ts = spark.createDataset(tombstoneIds.toSeq).toDF("docId")
-    inner.docmap(spark).join(broadcast(ts), Seq("docId"), "left_anti")
+  /** The inner totals minus the ids' live rows, found by one probe. */
+  def totals(spark: SparkSession): (Long, Long) = {
+    val (n, len) = inner.totals(spark)
+    val gone = inner.liveDocs(spark, tombstoneIds)
+    (n - gone.length, len - gone.map(_.docLen).sum)
   }
-
-  def termStats(spark: SparkSession): DataFrame = inner.termStats(spark) // raw; see lookupTerms
-
-  override def lookupTerms(spark: SparkSession, terms: Seq[String]): Map[String, TermStats] = {
-    val raw = inner.lookupTerms(spark, terms)
-    if (raw.isEmpty || tombstoneIds.isEmpty) return raw
-    val deleted = Deletes.deletedDf(spark, inner.segments(spark), raw.keys.toSeq, tombstoneIds)
-    raw.flatMap { case (t, st) =>
-      val df2 = st.df - deleted.getOrElse(t, 0L)
-      // rawDf keeps the pre-delete count: the scan/gather volume is the
-      // physical blocks, tombstones included (routing, ADVICE r2)
-      if (df2 <= 0) None else Some(t -> st.copy(df = df2, rawDf = st.df))
-    }
-  }
-
-  override def corpusStats(spark: SparkSession): CorpusStats =
-    Stats.corpusStats(docmap(spark))
 }
 
 object Deletes {
 
-  /** Plan-closure ceiling for the tombstone set (8 MB of sorted longs). */
+  /** Plan-closure ceiling for a TombstonedIndex id set (8 MB of sorted
+    * longs).
+    */
   val maxTombstones: Int = 1 << 20
 
-  private[index] def isSorted(a: Array[Long]): Boolean = {
-    var i = 1
-    while (i < a.length) { if (a(i - 1) >= a(i)) return false; i += 1 }
-    true
+  /** Query-term stats over a view's relations: the raw df/cf lookup,
+    * then df minus the term's masked postings (rawDf keeps the physical
+    * count); a term with no live posting is absent.
+    */
+  def liveTerms(spark: SparkSession, termStats: DataFrame, segments: => DataFrame,
+                masks: Seq[Array[Long]], terms: Seq[String]): Map[String, TermStats] = {
+    val raw = Stats.lookupTerms(termStats, terms)
+    if (raw.isEmpty || masks.forall(_.isEmpty)) return raw
+    val dead = deletedDf(spark, segments, raw.keys.toSeq, masks)
+    raw.flatMap { case (t, st) =>
+      val df = st.df - dead.getOrElse(t, 0L)
+      if (df <= 0) None else Some(t -> st.copy(df = df, rawDf = st.df))
+    }
   }
 
-  /** Per-term count of postings whose docId is tombstoned — a pruned
-    * scan of ONLY the given terms' blocks (termHash isin pushdown), so
-    * the cost scales with the query, not the corpus. Runs distributed;
-    * returns a tiny per-term map.
+  /** Per-term count of postings in dead (srcPart, docId) pairs — a
+    * pruned scan of ONLY the given terms' blocks in the masked parts
+    * (termHash isin pushdown), so the cost scales with the query, not
+    * the corpus. One job; returns a tiny per-term map.
     */
   def deletedDf(spark: SparkSession, segments: DataFrame, terms: Seq[String],
-                sortedTombstones: Array[Long]): Map[String, Long] = {
+                masks: Seq[Array[Long]]): Map[String, Long] = {
     import spark.implicits._
-    if (terms.isEmpty || sortedTombstones.isEmpty) return Map.empty
+    val masked = masks.indices.filter(masks(_).nonEmpty)
+    if (terms.isEmpty || masked.isEmpty) return Map.empty
     val hashes = terms.map(t => lucy.Hashing.termHash(t).asInstanceOf[Any])
-    val ts = sortedTombstones // task closure; bounded by maxTombstones
+    val dead = masks.toArray // task closure
     segments
       .filter(col("termHash").isin(hashes: _*) &&
-        col("term").isin(terms.map(_.asInstanceOf[Any]): _*))
-      .drop("srcPart").withColumn("partId", lit(0)).as[SegmentRow]
+        col("term").isin(terms.map(_.asInstanceOf[Any]): _*) &&
+        col("srcPart").isin(masked: _*))
+      // partId carries srcPart through the SegmentRow encoder
+      .withColumn("partId", col("srcPart")).drop("srcPart").as[SegmentRow]
       .mapPartitions { rows =>
         val acc = scala.collection.mutable.HashMap.empty[String, Long]
         rows.foreach { r =>
-          val d = PostingBlock.decode(r.toBlock)
+          val ids = PostingBlock.decode(r.toBlock).docIds
+          val d = dead(r.partId)
           var i = 0
           var n = 0L
-          while (i < d.docIds.length) {
-            if (java.util.Arrays.binarySearch(ts, d.docIds(i)) >= 0) n += 1
+          while (i < ids.length) {
+            if (java.util.Arrays.binarySearch(d, ids(i)) >= 0) n += 1
             i += 1
           }
           if (n > 0) acc.update(r.term, acc.getOrElse(r.term, 0L) + n)
         }
         acc.iterator
       }
-      .groupBy(col("_1").as("term"))
-      .agg(sum(col("_2")).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .collect().groupMapReduce(_._1)(_._2)(_ + _) // ≤ terms × tasks rows: no shuffle
   }
 }

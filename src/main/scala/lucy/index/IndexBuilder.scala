@@ -2,6 +2,7 @@ package lucy.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Build configuration. numPartitions=0 → spark.sql.shuffle.partitions.
@@ -13,12 +14,11 @@ case class IndexConfig(
     saltDfThreshold: Long = lucy.LucySpec.saltDfThreshold,
     maxSalts: Int = lucy.LucySpec.maxSalts,
     lang: Option[String] = Some("en"),
-    /** ST4: when set (e.g. "1 hour"), the streaming ingest drops
-      * EXACT replays — same (url, warc_ts) — across micro-batches via
-      * dropDuplicatesWithinWatermark state, so a replaying upstream
-      * can't double-count df/cf between compactions. Genuine recrawls
-      * (same url, NEW warc_ts) pass through — latest-wins belongs to
-      * compaction (PF2), not the ingest filter.
+    /** When set (e.g. "1 hour"), the streaming ingest drops EXACT replays
+      * — same (url, warc_ts) — across micro-batches via
+      * dropDuplicatesWithinWatermark state. N and df stay exact without
+      * it (a replayed row is a version like any other: the put masks
+      * the older copy); the filter only saves re-indexing replays.
       */
     streamDedupWatermark: Option[String] = None,
     /** §8.7: Porter-stem tokens after the stopword/length filters.
@@ -30,34 +30,94 @@ case class IndexConfig(
       */
     stemming: Boolean = lucy.LucySpec.stemming)
 
-/** Anything the query path can search: one segment index or a
-  * base+deltas composite (SURVEY.md §2.8 SET3).
+/** A docmap row of a view's live document, as a probe returns it:
+  * `part` indexes the view's parts; a null warc_ts reads as
+  * Long.MinValue µs, so it loses every tie.
+  */
+case class LiveDoc(part: Int, docId: Long, tsMicros: Long, docLen: Long)
+
+object LiveDoc {
+  /** The rows of docmap frames, each tagged with its part index, in
+    * one collect job.
+    */
+  def collect(docmaps: Seq[(DataFrame, Int)]): Seq[LiveDoc] =
+    docmaps.map { case (d, i) =>
+      d.select(lit(i).as("part"), col("docId"),
+        coalesce(unix_micros(col("warc_ts")), lit(Long.MinValue)).as("ts"),
+        col("docLen").cast("long").as("docLen"))
+    }.reduce(_ unionByName _).collect().toSeq
+      .map(r => LiveDoc(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+}
+
+/** Anything the query path can search: a set of immutable parts plus a
+  * mask per part (SURVEY.md §2.8 SET3).
+  *
+  * Invariant: every live document sits in exactly one (part, docId)
+  * pair that no mask names. A document's older versions and deleted
+  * documents are masked in their parts, so the union of the parts'
+  * unmasked rows is exactly the view's contents — no read-time version
+  * resolution anywhere.
   */
 trait SearchableIndex {
-  /** Segment blocks. MUST carry a `srcPart` column distinguishing
-    * physically independent sub-indexes: blocks of one (term, salt,
-    * srcPart) form a sorted, non-overlapping docId stream (a cursor);
-    * streams from different parts overlap in docId space and must be
-    * separate cursors in the kernel.
-    */
-  def segments(spark: SparkSession): DataFrame
-  def docmap(spark: SparkSession): DataFrame
-  def termStats(spark: SparkSession): DataFrame
-  def corpusStats(spark: SparkSession): CorpusStats
-
-  /** Query-term stats for planning. TombstonedIndex overrides this with
-    * post-delete df (Deletes.deletedDf).
-    */
-  def lookupTerms(spark: SparkSession, terms: Seq[String]): Map[String, TermStats] =
-    Stats.lookupTerms(termStats(spark), terms)
-
-  /** Sorted docIds masked from this view (empty unless wrapped by
-    * TombstonedIndex); the kernel skips them before they take heap slots.
-    */
-  def tombstoneIds: Array[Long] = Array.empty
 
   /** The physical index directories behind this view. */
   def parts: Seq[LucyIndex]
+
+  /** Per part, aligned with `parts`: its dead docIds, sorted ascending. */
+  def masks: Seq[Array[Long]]
+
+  /** Live documents and their Σ docLen. */
+  def totals(spark: SparkSession): (Long, Long)
+
+  /** N and avgdl. Σ docLen / N is the same Double division Spark's
+    * avg(docLen) performs (an exact Double sum below 2^53), so the stats
+    * are bit-equal to an aggregation over a from-scratch docmap.
+    */
+  final def corpusStats(spark: SparkSession): CorpusStats = {
+    val (n, len) = totals(spark)
+    CorpusStats(n, if (n == 0) 0.0 else len.toDouble / n)
+  }
+
+  /** Segment blocks, tagged with `srcPart` (the index into `parts`):
+    * blocks of one (term, salt, srcPart) form a sorted, non-overlapping
+    * docId stream (a cursor); streams of different parts overlap in
+    * docId space and are separate cursors in the kernel.
+    */
+  def segments(spark: SparkSession): DataFrame =
+    parts.zipWithIndex.map { case (p, i) =>
+      p.segments(spark).withColumn("srcPart", lit(i))
+    }.reduce(_ unionByName _)
+
+  /** The live docmap: each part's rows minus its mask. */
+  def docmap(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    parts.zip(masks).map { case (p, dead) =>
+      if (dead.isEmpty) p.docmap(spark)
+      else p.docmap(spark).join(broadcast(dead.toSeq.toDF("docId")), Seq("docId"), "left_anti")
+    }.reduce(_ unionByName _)
+  }
+
+  /** Raw per-term df/cf summed over the parts, masked postings included
+    * (see lookupTerms).
+    */
+  def termStats(spark: SparkSession): DataFrame =
+    if (parts.length == 1) parts.head.termStats(spark)
+    else parts.map(_.termStats(spark)).reduce(_ unionByName _)
+      .groupBy(col("term"))
+      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+
+  /** Query-term stats for planning (Deletes.liveTerms). */
+  def lookupTerms(spark: SparkSession, terms: Seq[String]): Map[String, TermStats] =
+    Deletes.liveTerms(spark, termStats(spark), segments(spark), masks, terms)
+
+  /** The live docmap rows of `ids`: one pruned scan of the parts'
+    * docmaps (one collect job); rows the masks name are dropped.
+    */
+  def liveDocs(spark: SparkSession, ids: Iterable[Long]): Seq[LiveDoc] =
+    if (ids.isEmpty) Seq.empty
+    else LiveDoc.collect(parts.zipWithIndex.map { case (p, i) =>
+      p.docmap(spark).filter(col("docId").isInCollection(ids)) -> i
+    }).filter(d => java.util.Arrays.binarySearch(masks(d.part), d.docId) < 0)
 
   /** The stemming flag the parts were built with, as their build
     * manifests record it; a manifest without the field counts as
@@ -89,151 +149,50 @@ trait SearchableIndex {
   */
 case class LucyIndex(dir: String) extends SearchableIndex {
   def parts: Seq[LucyIndex] = Seq(this)
-  def docmap(spark: SparkSession): DataFrame = spark.read.parquet(s"$dir/docmap")
-  def termStats(spark: SparkSession): DataFrame = spark.read.parquet(s"$dir/stats/terms")
-  def segments(spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$dir/segments").withColumn("srcPart", lit(0))
+  val masks: Seq[Array[Long]] = Seq(Array.emptyLongArray)
+  override def docmap(spark: SparkSession): DataFrame = LucyIndex.read(spark, s"$dir/docmap")
+  override def termStats(spark: SparkSession): DataFrame = LucyIndex.read(spark, s"$dir/stats/terms")
+  override def segments(spark: SparkSession): DataFrame =
+    LucyIndex.read(spark, s"$dir/segments").withColumn("srcPart", lit(0))
   def manifest(spark: SparkSession): Option[BuildManifest] = Manifest.readBuild(spark, dir)
-  def corpusStats(spark: SparkSession): CorpusStats = {
+  /** From the build manifest; a manifest without sumDocLen recovers it
+    * from docs × avgdl (exact while Σ docLen < 2^51).
+    */
+  def totals(spark: SparkSession): (Long, Long) = {
     val m = manifest(spark).getOrElse(sys.error(s"no build manifest in $dir"))
-    CorpusStats(m.docs, m.avgdl)
+    (m.docs, m.sumDocLen.getOrElse(math.round(m.avgdl * m.docs)))
   }
 }
 
-/** Query-time union of a base index and delta indexes (SET3).
-  *
-  * Exact when parts are url-disjoint (pure appends). When a url was
-  * recrawled into a delta and not yet compacted: the doc keeps its docId
-  * (hash of url), the kernel scores AT MOST ONE posting per (term, doc)
-  * — cursors of one term are probed first-match — and docmap/corpus
-  * stats take the LATEST version per docId; stale postings of replaced
-  * versions may still match until compaction merges them out
-  * (SURVEY.md §2.9 ST2: the index is additive; dedup happens at
-  * compaction). Compaction restores exact single-index semantics.
+object LucyIndex {
+  private val schemas = scala.collection.concurrent.TrieMap[String, StructType]()
+
+  /** A committed parquet stage of an index dir. Spark infers a parquet
+    * schema by reading a footer in a Spark job; a committed stage never
+    * changes, so each path's schema is inferred once per JVM and every
+    * later read (each view, probe and engine) passes it and runs no job.
+    */
+  private[lucy] def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemas.getOrElseUpdate(path, spark.read.parquet(path).schema)).parquet(path)
+}
+
+/** The dead documents of one part: sorted docIds and their Σ docLen. */
+case class PartMask(docIds: Array[Long], sumDocLen: Long)
+
+/** Query-time union of parts (a base and delta indexes), each with its
+  * mask, aligned with `parts` (none: nothing is masked). N and avgdl are
+  * manifest arithmetic — the parts' totals minus the masks' — and run no
+  * Spark job.
   */
-object CompositeIndex {
-  /** Driver bound for fastCorpusStats' collected small-part rows.
-    * A `var` solely so IncrementalSpec can lower it to pin the
-    * fast-path/fallback boundary without a 2²⁰-doc fixture (VERDICT r6
-    * next-round #6); production code never writes it.
-    */
-  @volatile var smallSideLimit: Long = 1L << 20
-}
-
-case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
+case class CompositeIndex(parts: Seq[LucyIndex], dead: Seq[PartMask] = Nil) extends SearchableIndex {
   require(parts.nonEmpty, "composite of zero indexes")
-  def segments(spark: SparkSession): DataFrame =
-    parts.zipWithIndex.map { case (p, i) =>
-      p.segments(spark).withColumn("srcPart", lit(i))
-    }.reduce(_ unionByName _)
-  def docmap(spark: SparkSession): DataFrame = {
-    // latest version per docId wins (warc_ts tie → later part wins)
-    val tagged = parts.zipWithIndex.map { case (p, i) =>
-      p.docmap(spark).withColumn("srcIdx", lit(i))
-    }.reduce(_ unionByName _)
-    tagged.groupBy(col("docId"))
-      .agg(max_by(struct(col("url"), col("warc_ts"), col("lang"), col("docLen")),
-        struct(col("warc_ts"), col("srcIdx"))).as("r"))
-      .select(col("docId"), col("r.url").as("url"), col("r.warc_ts").as("warc_ts"),
-        col("r.lang").as("lang"), col("r.docLen").as("docLen"))
-  }
-  def termStats(spark: SparkSession): DataFrame =
-    parts.map(_.termStats(spark)).reduce(_ unionByName _)
-      .groupBy(col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-  def corpusStats(spark: SparkSession): CorpusStats =
-    if (parts.length == 1) parts.head.corpusStats(spark)
-    else fastCorpusStats(spark).getOrElse(aggCorpusStats(spark))
-
-  /** Shuffle-free composite stats (r6, VERDICT r5 next-round #6): the
-    * base+deltas shape has ONE big part and small recent ones, and the
-    * big part's manifest already carries exact (docs, Σ docLen). So:
-    * collect the small parts' slim docmap rows (bounded — guard below),
-    * probe the big part ONCE with a broadcast semi-join for the
-    * overlapping docIds (a pipelined scan, no Exchange), and apply the
-    * winner rule — max (warc_ts, srcIdx), identical to docmap()'s
-    * max_by struct ordering — driver-side. N and Σ docLen corrections
-    * are exact Long arithmetic; avgdl = Σ/N is the same division the
-    * builder's avg produced (doc on BuildManifest.sumDocLen), pinned by
-    * IncrementalSpec's bit-equal composite-vs-scratch scores. This was
-    * the dominant first-query cost of a live store view: a full
-    * docmap-union SHUFFLE per mutation, now one exchange-free pass.
-    * Honest cost accounting: the semi-join's broadcast side is
-    * delta-sized, but its SCAN side reads the whole big-part docmap
-    * (column-pruned to 3 columns, pipelined, no shuffle) — one such
-    * pass per view composition (the engine caches stats per view, the
-    * warm-behind pays it off the query path). Exact stats under
-    * url-update semantics need to learn the delta∩base overlap from
-    * somewhere; without a docId-indexed base that is a scan per NEW
-    * composition, amortized by batching puts.
-    */
-  private def fastCorpusStats(spark: SparkSession): Option[CorpusStats] = {
-    val manifests = parts.map(_.manifest(spark))
-    if (manifests.exists(m => m.isEmpty || m.get.sumDocLen.isEmpty)) return None
-    val docsArr = manifests.map(_.get.docs)
-    val bigIdx = docsArr.zipWithIndex.maxBy(_._1)._2
-    if (docsArr.sum - docsArr(bigIdx) > CompositeIndex.smallSideLimit) return None
-    val big = parts(bigIdx)
-    // (docId, docLen, tsMicros, srcIdx) rows of every small part,
-    // gathered in ONE union job (a collect per part was most of the
-    // path's wall at 5+ deltas); unix_micros is an exact image of the
-    // timestamp, so Long ordering == timestamp ordering in the max_by
-    // struct
-    // null warc_ts guard (ADVICE r6 #3): docmap()'s max_by and the
-    // aggregation fallback tolerate null timestamps; this path must not
-    // NPE on them. Long.MinValue sorts a null-ts row below every real
-    // one — the same "loses every tie" rank a null has in the max_by
-    // struct ordering.
-    val smalls = parts.zipWithIndex.filter(_._2 != bigIdx).map { case (p, i) =>
-      p.docmap(spark)
-        .select(col("docId"), col("docLen").cast("long"),
-          coalesce(unix_micros(col("warc_ts")), lit(Long.MinValue)),
-          lit(i).as("srcIdx"))
-    }.reduce(_ unionByName _)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    val smallIds = smalls.map(_._1).distinct
-    val overlap: Map[Long, (Long, Long)] = if (smallIds.isEmpty) Map.empty else {
-      import spark.implicits._
-      big.docmap(spark)
-        .select(col("docId"), col("docLen").cast("long"),
-          coalesce(unix_micros(col("warc_ts")), lit(Long.MinValue)))
-        .join(broadcast(smallIds.toSeq.toDF("docId")), Seq("docId"), "left_semi")
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    }
-    // winner per small-involved docId over {big row?, small rows}
-    val byId = smalls.groupBy(_._1)
-    var n = docsArr(bigIdx)
-    var sumLen = manifests(bigIdx).get.sumDocLen.get
-    byId.foreach { case (id, rows) =>
-      // max by (tsMicros, srcIdx); big's srcIdx is bigIdx
-      val bestSmall = rows.maxBy(r => (r._3, r._4))
-      overlap.get(id) match {
-        case Some((bigLen, bigTs)) =>
-          val smallWins = bestSmall._3 > bigTs ||
-            (bestSmall._3 == bigTs && bestSmall._4 > bigIdx)
-          if (smallWins) sumLen += bestSmall._2 - bigLen
-        case None =>
-          n += 1
-          sumLen += bestSmall._2
-      }
-    }
-    Some(CorpusStats(n, if (n == 0) 0.0 else sumLen.toDouble / n))
-  }
-
-  /** Fallback (pre-r6 manifests, or a small side too big for the
-    * driver): SLIM winners aggregation — the scan and shuffle carry
-    * (docId, docLen, warc_ts), not the url strings that dominate docmap
-    * row width. Winner ordering is identical to docmap()'s.
-    */
-  private def aggCorpusStats(spark: SparkSession): CorpusStats = {
-    val slim = parts.zipWithIndex.map { case (p, i) =>
-      p.docmap(spark).select(col("docId"), col("docLen"), col("warc_ts"),
-        lit(i).as("srcIdx"))
-    }.reduce(_ unionByName _)
-    val row = slim.groupBy(col("docId"))
-      .agg(max_by(col("docLen"), struct(col("warc_ts"), col("srcIdx"))).as("docLen"))
-      .agg(count(lit(1)).as("n"), avg(col("docLen")).as("avgdl")).head()
-    CorpusStats(row.getLong(0), if (row.isNullAt(1)) 0.0 else row.getDouble(1))
+  require(dead.isEmpty || dead.length == parts.length, "one mask per part")
+  val masks: Seq[Array[Long]] =
+    if (dead.isEmpty) parts.map(_ => Array.emptyLongArray) else dead.map(_.docIds)
+  def totals(spark: SparkSession): (Long, Long) = {
+    val ts = parts.map(_.totals(spark))
+    (ts.map(_._1).sum - dead.map(_.docIds.length.toLong).sum,
+      ts.map(_._2).sum - dead.map(_.sumDocLen).sum)
   }
 }
 
@@ -297,42 +256,14 @@ object IndexBuilder {
   }
 
   /** Stages 4–10 from prepared inputs — shared by the batch build and
-    * the compaction path (which feeds merged winners instead of a fresh
-    * ingest, SURVEY.md §3.3 step 4).
+    * the compaction path (which feeds the parts' unmasked rows instead of
+    * a fresh ingest, SURVEY.md §3.3 step 4).
     */
-  def writeIndex(docmapSrc: DataFrame, termTfDlSrc: DataFrame, indexDir: String,
+  def writeIndex(docmapSrc: DataFrame, termTfDl: DataFrame, indexDir: String,
                  config: IndexConfig, fingerprint: String,
-                 frontier: Option[Long] = None,
-                 persistPostings: Boolean = false): BuildManifest = {
+                 frontier: Option[Long] = None): BuildManifest = {
     val spark = docmapSrc.sparkSession
     val t0 = System.nanoTime()
-    // r7 (guide §1.2 step 1 — don't compute things twice): termTfDl
-    // feeds THREE full passes — the term-stats aggregation (stage 6),
-    // repartitionByRange's range-boundary sampling, and the pack/write
-    // pass (stages 7–10). When the frame is EXPENSIVE to recompute —
-    // compaction's re-decode of every part's posting blocks + the
-    // winners join — the caller asks for one materialization to serve
-    // all three (persistPostings=true; measured on the frozen bench:
-    // store_compact 17.5 → 12.1 s, compact_50k_plus_10k 6.3 → 5.1 s at
-    // idle). The BATCH build deliberately does NOT (its three passes
-    // re-run only the per-doc posting UDF over the already-cached
-    // `cleaned` frame, and the interleaved idle A/B showed the persist
-    // costing MORE than the recomputes there: index_build 7.8 → 9.1 s —
-    // the classic materialize-vs-recompute call, made per producer).
-    // Unpersisted as soon as the segments stage has committed; on the
-    // resume path a never-evaluated persist is free.
-    val termTfDl =
-      if (persistPostings) termTfDlSrc.persist(StorageLevel.MEMORY_AND_DISK)
-      else termTfDlSrc
-    try {
-      writeIndexStages(docmapSrc, termTfDl, indexDir, config, fingerprint, frontier, t0)
-    } finally if (persistPostings) termTfDl.unpersist()
-  }
-
-  private def writeIndexStages(docmapSrc: DataFrame, termTfDl: DataFrame, indexDir: String,
-                               config: IndexConfig, fingerprint: String,
-                               frontier: Option[Long], t0: Long): BuildManifest = {
-    val spark = docmapSrc.sparkSession
     // marker FIRST: partial builds are identity-guarded too (ADVICE r1)
     Manifest.claimFingerprint(spark, indexDir, fingerprint)
     val numPartitions =
@@ -346,7 +277,7 @@ object IndexBuilder {
       // upstream shuffle width (coalesce never widens; equal is a no-op)
       docmapSrc.coalesce(numPartitions).write.mode("overwrite").parquet(s"$indexDir/docmap")
     }
-    val docmap = spark.read.parquet(s"$indexDir/docmap")
+    val docmap = LucyIndex.read(spark, s"$indexDir/docmap")
     val docmapMs = (System.nanoTime() - tDocmap0) / 1000000
 
     // One pass over docmap: corpus stats (A3) + the §8.5 collision check
@@ -387,7 +318,7 @@ object IndexBuilder {
         .sortWithinPartitions(col("term"))
         .write.mode("overwrite").parquet(s"$indexDir/stats/terms")
     }
-    val termStats = spark.read.parquet(s"$indexDir/stats/terms")
+    val termStats = LucyIndex.read(spark, s"$indexDir/stats/terms")
     val statsMs = (System.nanoTime() - tStats0) / 1000000
 
     // Stages 7–10: salting, range partition, pack, write
@@ -399,7 +330,7 @@ object IndexBuilder {
         .withColumn("partId", spark_partition_id())
         .write.mode("overwrite").parquet(s"$indexDir/segments")
     }
-    val segments = spark.read.parquet(s"$indexDir/segments")
+    val segments = LucyIndex.read(spark, s"$indexDir/segments")
     val segmentsMs = (System.nanoTime() - tSeg0) / 1000000
 
     // Per-partition manifest rows: aggregated once (one row per segment

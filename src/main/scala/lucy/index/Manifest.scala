@@ -34,14 +34,12 @@ case class BuildManifest(
       */
     @JsonDeserialize(contentAs = classOf[java.lang.Long]) // else small values box as Integer
     frontier: Option[Long] = None,
-    /** Exact Σ docLen over this part's docmap: lets the composite view
-      * derive N/avgdl WITHOUT a corpus-wide shuffle — driver-side
-      * winner correction over the (small) delta rows plus one probe
-      * scan of the big part. docLen sums are exact Longs, and Spark's
-      * avg over ints is the same sum/count double division while the
-      * sum is below 2^53, so the derived avgdl is bit-equal to the agg
-      * in that regime. None (older manifests) falls back to the
-      * aggregation path.
+    /** Exact Σ docLen over this part's docmap: a view's N/avgdl are the
+      * parts' sums minus their masks' (SearchableIndex.totals), with no
+      * Spark job. docLen sums are exact Longs, and Spark's avg over ints
+      * is the same sum/count double division while the sum is below
+      * 2^53, so the derived avgdl is bit-equal to the agg in that regime.
+      * None (older manifests) is recovered from docs × avgdl.
       */
     @JsonDeserialize(contentAs = classOf[java.lang.Long])
     sumDocLen: Option[Long] = None,
@@ -58,7 +56,7 @@ case class PartitionManifest(partId: Int, blocks: Long, postings: Long,
 
 /** The metadata commit protocol — the only code that knows it. Build
   * manifests, partition manifests, the store's `current` pointer and its
-  * tombstone log are all records committed the same way:
+  * masks are all records committed the same way:
   *
   *  - write: a record dir holds ONE JSON-lines data file (one object per
   *    line, so `spark.read.json` reads it too), written first, then the

@@ -8,14 +8,13 @@ case class CorpusStats(n: Long, avgdl: Double)
 
 /** Per-term statistics: document frequency + collection frequency.
   *
-  * `rawDf` is the PRE-delete df — what a scan of the term's blocks will
-  * physically touch. TombstonedIndex.lookupTerms sets df to the exact
-  * post-delete value (scoring/idf) while preserving rawDf; for a plain
-  * index the two coincide (the -1 sentinel means "same as df"). The
-  * gather-vs-distributed routing decision must use rawDf: gatherLocal
-  * collects the raw blocks, tombstones included, so routing on the
-  * post-delete df could pull up to maxTombstones postings beyond the
-  * measured driver-kernel crossover (ADVICE r2).
+  * `df` is the LIVE df (masked postings excluded, see
+  * SearchableIndex.lookupTerms); `rawDf` is what a scan of the term's
+  * blocks physically touches, masked postings included (the -1 sentinel
+  * means "same as df", as in an unmasked view). Routing between the
+  * gather and distributed shapes must use rawDf (`gatherDf`): the gather
+  * collects the raw blocks, so routing on the live df could pull the
+  * masked postings beyond the measured driver-kernel crossover.
   */
 case class TermStats(term: String, df: Long, cf: Long, rawDf: Long = -1L) {
   def gatherDf: Long = if (rawDf >= 0) rawDf else df

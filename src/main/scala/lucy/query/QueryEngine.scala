@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField}
 import lucy.LucySpec
-import lucy.index.{CorpusStats, SearchableIndex, Stats, TermStats}
+import lucy.index.{CorpusStats, Deletes, SearchableIndex, Stats, TermStats}
 
 /** Warm serving handle over an immutable index — the analog of lucy.js's
   * in-memory live index for a query-serving deployment, and the one
@@ -28,7 +28,8 @@ import lucy.index.{CorpusStats, SearchableIndex, Stats, TermStats}
   * `gatherMaxPostings` and `expandCeiling` exist so specs can force the
   * distributed shapes and the over-expansion ceiling at toy scale.
   *
-  * Thread-safe; Bench drives it from 8 concurrent client threads.
+  * Thread-safe: every cache is a concurrent map or synchronized, and
+  * concurrent searches share one engine.
   */
 class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
                                  gatherMaxPostings: Long = Searcher.defaultGatherMaxPostings,
@@ -38,7 +39,9 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     this(spark, index, Searcher.defaultGatherMaxPostings)
 
   private val stem = index.stemming(spark)
-  private val tombstones = index.tombstoneIds
+  // per-part dead docIds; the plan ships none when nothing is masked
+  private val masks: Array[Array[Long]] =
+    if (index.masks.forall(_.isEmpty)) Array.empty else index.masks.toArray
   lazy val stats: CorpusStats = index.corpusStats(spark)
   private val dfCache = TrieMap[String, Option[TermStats]]()
   // Gathered posting blocks per term (size-capped LRU; see BlockCache):
@@ -76,11 +79,11 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     this
   }
 
-  /** Index-aware: a TombstonedIndex returns post-delete df. */
+  /** Live df per term over the engine's own relations; cached per term. */
   private def lookup(terms: Seq[String]): Map[String, TermStats] = {
     val missing = terms.filterNot(dfCache.contains)
     if (missing.nonEmpty) {
-      val fetched = index.lookupTerms(spark, missing)
+      val fetched = Deletes.liveTerms(spark, termStatsDf, segmentsDf, masks.toSeq, missing)
       missing.foreach(t => dfCache.putIfAbsent(t, fetched.get(t)))
     }
     terms.flatMap(t => dfCache(t).map(t -> _)).toMap
@@ -89,30 +92,29 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
   // (prefix, cap) → expanded terms, keyed by both because the over-
   // expansion re-expands one prefix at growing caps. An engine serves
   // one immutable view (a store mutation builds a new engine), so
-  // entries never cross a tombstone-set change.
+  // entries never cross a mask change.
   private val prefixCache = TrieMap[(String, Int), Seq[String]]()
 
   private def expand(prefix: String, cap: Int): Seq[String] =
     prefixCache.getOrElseUpdate((prefix, cap), Stats.expandPrefix(termStatsDf, prefix, cap))
 
-  /** The first maxPrefixExpand terms starting with `prefix` that survive
-    * the view's deletes, ascending — the naive engine's term set over
-    * the surviving corpus. Expansion runs over the RAW term stats, so a
-    * fully-deleted term (post-delete df ≤ 0) can take a slot. When the
-    * cap binds under deletes, over-expand geometrically, drop non-
-    * survivors through the tombstone-aware lookup, and stop once the cap
-    * holds only survivors or the matches run out (an expansion returned
+  /** The first maxPrefixExpand terms starting with `prefix` that have a
+    * live posting, ascending — the naive engine's term set over the live
+    * corpus. Expansion runs over the RAW term stats, so a term whose
+    * postings are all masked (deleted or superseded docs) can take a
+    * slot. When the cap binds under masks, over-expand geometrically,
+    * drop dead terms through the live-df lookup, and stop once the cap
+    * holds only live terms or the matches run out (an expansion returned
     * fewer than asked). `expandCeiling` bounds the loop and the driver
     * collect (~100 MB of terms at 2^22) even when millions of matching
-    * terms are fully deleted; past it the engine returns the survivors
-    * found so far, and compact() — which purges tombstones — restores
-    * exactness.
+    * terms are dead; past it the engine returns the live terms found so
+    * far, and compact() — which drops masked rows — restores exactness.
     */
   private def expandSurviving(prefix: String): Array[String] = {
     val max = LucySpec.maxPrefixExpand
     var cap = max
     var expanded = expand(prefix, cap)
-    if (tombstones.isEmpty || expanded.length < cap) return expanded.toArray.sorted
+    if (masks.isEmpty || expanded.length < cap) return expanded.toArray.sorted
     var surviving = expanded.filter(lookup(expanded).contains)
     while (surviving.length < max && expanded.length >= cap && cap < expandCeiling) {
       cap = math.min(cap * 2, expandCeiling)
@@ -146,12 +148,11 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     // closure IS the broadcast (an explicit torrent broadcast per query
     // costs more than it saves).
     val plan = QueryPlan(present, present.map(dfMap(_).df), stats.n, stats.avgdl,
-      conjunctive = conj, k = k, phraseSlots = phraseSlots, tombstones = tombstones)
+      conjunctive = conj, k = k, phraseSlots = phraseSlots, masks = masks)
 
-    // Routing and bucket sizing use the RAW (pre-delete) postings volume:
-    // the gather collects, and the exchange shuffles, the physical
-    // blocks, tombstoned postings included. Scoring idf uses the exact
-    // post-delete df carried in the plan.
+    // Routing and bucket sizing use the RAW postings volume: the gather
+    // collects, and the exchange shuffles, the physical blocks, masked
+    // postings included. Scoring idf uses the live df carried in the plan.
     val sumRawDf = present.map(dfMap(_).gatherDf).sum
     if (sumRawDf <= gatherMaxPostings) Searcher.gatherLocal(spark, segmentsDf, plan, blockCache)
     else {
@@ -169,8 +170,8 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     * a mutation committed after the engine was built never mixes views.
     * docId is the url's hash, so every part holding a docId holds the
     * same url: a pruned `docId IN (k ids)` scan of the parts' docmaps
-    * needs no latest-wins aggregate, and top-k never holds a tombstoned
-    * doc, so it needs no anti-join either. Rows keep the top-k order;
+    * needs no version resolution, and top-k never holds a masked doc, so
+    * it needs no anti-join either. Rows keep the top-k order;
     * an id without a docmap row gets a null url.
     */
   def searchWithUrls(query: String, mode: QueryMode.Value = QueryMode.And,

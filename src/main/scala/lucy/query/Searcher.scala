@@ -205,7 +205,7 @@ object Searcher {
     val groups = plan.terms.indices.flatMap { ti =>
       val t = plan.terms(ti)
       (cached.getOrElse(t, Seq.empty) ++ fetched.getOrElse(t, Seq.empty))
-        .map { case (_, blocks) => (ti, blocks) }
+        .map { case ((_, srcPart), blocks) => (ti, srcPart, blocks) }
     }
 
     val hits = Wand.topK(plan, groups, 0L, Long.MaxValue).toArray
@@ -224,11 +224,11 @@ object Searcher {
       .as[BucketedBlock]
       .mapPartitions { rows =>
         val sorted = rows.toArray.sortBy(r => (r.term, r.salt, r.srcPart, r.firstDocId))
-        val cursors = mutable.ArrayBuffer.empty[(Int, Array[PostingBlock])]
+        val cursors = mutable.ArrayBuffer.empty[(Int, Int, Array[PostingBlock])]
         RunIterator(sorted.iterator)(r => (r.term, r.salt, r.srcPart)).foreach {
-          case ((t, _, _), g) =>
+          case ((t, _, srcPart), g) =>
             val ti = plan.termIndex(t)
-            if (ti >= 0) cursors += ((ti, g.map(_.toBlock).toArray))
+            if (ti >= 0) cursors += ((ti, srcPart, g.map(_.toBlock).toArray))
         }
         Wand.topK(plan, cursors, 0L, Long.MaxValue)
       }
@@ -269,10 +269,10 @@ object Searcher {
           // srcPart); rows arrive sorted by (term, salt, srcPart, firstDocId).
           // srcPart matters: different sub-indexes of a composite overlap in
           // docId space and must not be concatenated into one stream.
-          val groups = mutable.ArrayBuffer.empty[(Int, Array[PostingBlock])]
-          RunIterator(run)(r => (r.term, r.salt, r.srcPart)).foreach { case ((t, _, _), g) =>
+          val groups = mutable.ArrayBuffer.empty[(Int, Int, Array[PostingBlock])]
+          RunIterator(run)(r => (r.term, r.salt, r.srcPart)).foreach { case ((t, _, srcPart), g) =>
             val ti = plan.termIndex(t)
-            if (ti >= 0) groups += ((ti, g.map(_.toBlock).toArray))
+            if (ti >= 0) groups += ((ti, srcPart, g.map(_.toBlock).toArray))
           }
           Wand.topK(plan, groups, bucket * width, bucketEndInclusive(bucket, width))
         }

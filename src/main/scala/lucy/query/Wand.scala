@@ -10,12 +10,10 @@ import lucy.index.{DecodedBlock, PostingBlock}
 case class QueryPlan(terms: Array[String], dfs: Array[Long], n: Long,
                      avgdl: Double, conjunctive: Boolean, k: Int,
                      phraseSlots: Array[Int] = Array.empty,
-                     tombstones: Array[Long] = Array.empty) {
-  // tombstones: sorted docIds masked by deletes (TombstonedIndex);
-  // n/avgdl/dfs are already post-delete, the kernel only needs to skip
-  // the masked docs themselves.
-  def tombstoned(d: Long): Boolean =
-    tombstones.length > 0 && java.util.Arrays.binarySearch(tombstones, d) >= 0
+                     masks: Array[Array[Long]] = Array.empty) {
+  // masks: per srcPart, the sorted docIds dead in that part (empty when
+  // the view masks nothing); n/avgdl/dfs already count live docs only,
+  // the kernel only needs to keep cursors off the dead pairs.
   // phraseSlots: for phrase queries, the index into `terms` of each
   // query-token slot in original order (empty = not a phrase). Phrase
   // implies conjunctive; matching docs additionally need the slots'
@@ -36,8 +34,8 @@ case class ScoredDoc(docId: Long, score: Double, nTerms: Int)
   * signal; the docId == Long.MaxValue sentinel is paired with it but a
   * LIVE cursor may also legitimately sit at Long.MaxValue.
   */
-private[query] final class Cursor(val termIdx: Int, blocks: Array[PostingBlock],
-                                  endInclusive: Long, avgdl: Double) {
+private[query] class Cursor(val termIdx: Int, blocks: Array[PostingBlock],
+                            endInclusive: Long, avgdl: Double) {
   private var bi = 0
   private var decoded: DecodedBlock = null
   private var decodedPos: Array[Array[Int]] = null // lazy, phrase mode only
@@ -45,7 +43,7 @@ private[query] final class Cursor(val termIdx: Int, blocks: Array[PostingBlock],
   var docId: Long = -1L
   var exhausted: Boolean = false
 
-  private def exhaust(): Unit = {
+  protected def exhaust(): Unit = {
     exhausted = true; docId = Long.MaxValue; decoded = null; decodedPos = null
   }
 
@@ -131,6 +129,31 @@ private[query] final class Cursor(val termIdx: Int, blocks: Array[PostingBlock],
     if (docId == Long.MaxValue) exhaust() else advanceTo(docId + 1)
 }
 
+/** A cursor over a part with dead docs (`dead`, sorted): it lands only on
+  * live postings, so every (term, doc) match the kernel sees is the live
+  * version's. A subclass, so an unmasked cursor pays nothing per posting.
+  * Block metadata still counts the dead postings, which keeps every
+  * block and stream bound an upper bound.
+  */
+private[query] final class MaskedCursor(termIdx: Int, blocks: Array[PostingBlock],
+                                        endInclusive: Long, avgdl: Double,
+                                        dead: Array[Long])
+    extends Cursor(termIdx, blocks, endInclusive, avgdl) {
+  private var di = 0 // dead(di) is the first dead docId ≥ every docId landed on
+
+  private def isDead(d: Long): Boolean = {
+    while (di < dead.length && dead(di) < d) di += 1
+    di < dead.length && dead(di) == d
+  }
+
+  override def advanceTo(target: Long): Unit = {
+    super.advanceTo(target)
+    while (!exhausted && isDead(docId)) {
+      if (docId == Long.MaxValue) exhaust() else super.advanceTo(docId + 1)
+    }
+  }
+}
+
 /** Block-max WAND kernel (SURVEY.md §4.4; Broder et al. CIKM'01, Ding &
   * Suel SIGIR'11 [LIT]) — runs per docId range, either inside
   * mapPartitions (distributed buckets) or on the driver over gathered
@@ -164,15 +187,18 @@ object Wand {
     *
     * @param blocksByCursor blocks grouped per (term, salt, srcPart), each
     *                       group sorted by firstDocId, with the term's
-    *                       index into plan.terms
+    *                       index into plan.terms and the srcPart
     * @param lo             first docId of the range (inclusive)
     * @param endInclusive   last docId of the range (inclusive; pass
     *                       Long.MaxValue for an unbounded range)
     */
-  def topK(plan: QueryPlan, blocksByCursor: Iterable[(Int, Array[PostingBlock])],
+  def topK(plan: QueryPlan, blocksByCursor: Iterable[(Int, Int, Array[PostingBlock])],
            lo: Long, endInclusive: Long): Iterator[ScoredDoc] = {
-    val cursors = blocksByCursor.iterator.map { case (ti, bs) =>
-      val c = new Cursor(ti, bs, endInclusive, plan.avgdl)
+    val cursors = blocksByCursor.iterator.map { case (ti, srcPart, bs) =>
+      val dead = if (srcPart < plan.masks.length) plan.masks(srcPart) else Array.emptyLongArray
+      val c =
+        if (dead.isEmpty) new Cursor(ti, bs, endInclusive, plan.avgdl)
+        else new MaskedCursor(ti, bs, endInclusive, plan.avgdl, dead)
       c.advanceTo(lo)
       c
     }.filterNot(_.exhausted).toArray
@@ -191,8 +217,8 @@ object Wand {
     val heap = new mutable.PriorityQueue[ScoredDoc]()(bestFirst) // min-root
     def theta: Double = if (heap.size >= plan.k) heap.head.score else Double.NegativeInfinity
 
-    // score doc d: addends in ascending term order (cursors per term are
-    // disjoint docId sets, so at most one cursor per term matches d)
+    // score doc d: addends in ascending term order (a doc is live in one
+    // part only, so at most one cursor per term sits at d)
     val byTerm: Array[Array[Cursor]] = {
       val m = Array.fill(nQ)(mutable.ArrayBuffer.empty[Cursor])
       cursors.foreach(c => m(c.termIdx) += c)
@@ -204,7 +230,6 @@ object Wand {
     // pure function recomputed to the same bits every call — but hoists
     // the log out of the per-posting hot loop.
     def scoreDoc(d: Long): Unit = {
-      if (plan.tombstoned(d)) return // deleted doc: never takes a heap slot
       var score = 0.0
       var matched = 0
       var t = 0
@@ -363,10 +388,8 @@ object Wand {
       }
       if (!done) {
         if (aligned) {
-          // tombstone check first (cheapest), then phrase adjacency
-          // (positions decode only for surviving aligned candidates)
-          if (!plan.tombstoned(candidate) &&
-            (plan.phraseSlots.isEmpty || phraseMatches(atCursor, plan.phraseSlots))) {
+          // phrase adjacency: positions decode only for aligned candidates
+          if (plan.phraseSlots.isEmpty || phraseMatches(atCursor, plan.phraseSlots)) {
             // dense fast path: score addends in ascending term order (§8.4)
             var score = 0.0
             var u = 0

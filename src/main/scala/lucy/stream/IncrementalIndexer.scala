@@ -15,36 +15,46 @@ import lucy.index._
   *
   * {{{
   * rootDir/
-  *   base/gen-<G>/        full LucyIndex (gen-0 = initial batch build)
-  *   deltas/delta-<id>/   one LucyIndex per micro-batch
-  *   deletes/del-<n>/     tombstone log generation, one {docId} per line
-  *   current/p-<n>/       json pointer {gen, compactedThrough} — LAST
+  *   base/gen-<G>/          full LucyIndex (gen-0 = initial batch build)
+  *   deltas/delta-<id>/     one LucyIndex per micro-batch, plus
+  *     meta/masks/          the masks its put wrote
+  *   deletes/del-<n>/       the masks one delete wrote
+  *   current/p-<n>/         json pointer {gen, compactedThrough} — LAST
   * }}}
   *
-  * Every metadata record here — the `current` pointer generations
-  * `current/p-<n>/`, the tombstone log `deletes/del-<n>/` and each part's
-  * build manifest — is committed and read through the one protocol in
-  * [[lucy.index.Manifest]]: JSON-lines data, then `_SUCCESS`; torn dirs
-  * read as absent; generation dirs listed by exact prefix. No Spark job
-  * runs on these paths.
+  * Masks: each mutation commits the (part, docId) pairs it made dead,
+  * one [[Mask]] line each with the doc's docLen. A put probes its docIds
+  * against the other live parts; of two versions of a url the later
+  * warc_ts wins and the later part breaks ties, and the loser is masked
+  * — the older part's row, or the new delta's own row when an older
+  * recrawl arrives late. A delete masks each url's live version. So
+  * every live doc sits in exactly one unmasked (part, docId) pair, and
+  * the view is exactly the store's contents (SearchableIndex). Records
+  * naming a part outside the view (a compacted generation) are ignored.
   *
-  * Exactly-once: delta dirs are named by batchId; a replayed batch finds
-  * the completed manifest (fingerprint "delta-<id>") and is a no-op —
-  * IndexBuilder's stage checkpoints make a half-written delta resume
-  * instead of duplicating. The `current` pointer is committed LAST (and
-  * pruned to its two newest generations), so a crash anywhere leaves a
-  * consistent view (SURVEY.md §7.3 item 4).
+  * Every metadata record — the pointer, the masks and each part's build
+  * manifest — is committed and read through [[lucy.index.Manifest]]:
+  * JSON-lines data, then `_SUCCESS`; torn dirs read as absent;
+  * generation dirs listed by exact prefix. Composing a view runs no
+  * Spark job.
   *
-  * Watermark/late data (ST2): recrawls of a url landing in a later batch
-  * are additive until compaction, where PF2 (latest warc_ts per url)
-  * picks the winner — late rows are never dropped.
+  * Exactly-once: delta dirs are named by batchId, and a delta is live
+  * only once its build manifest AND its masks are committed, so a crash
+  * between the two leaves it invisible, never counted twice. Replaying
+  * the batch id then writes the masks; replaying a live batch is a
+  * no-op. IndexBuilder's stage checkpoints make a half-written delta
+  * resume. Compaction commits the `current` pointer LAST (pruned to its
+  * two newest generations), so a crash anywhere leaves a consistent view
+  * (SURVEY.md §7.3 item 4).
   */
 object IncrementalIndexer {
 
   case class CurrentPointer(gen: Long, compactedThrough: Long)
 
-  /** One line of a tombstone log generation. */
-  case class Tombstone(docId: Long)
+  /** One dead (part, docId) pair; `part` is the part's dir relative to
+    * the store root.
+    */
+  case class Mask(part: String, docId: Long, docLen: Long)
 
   def start(pagesStream: DataFrame, rootDir: String, checkpointDir: String,
             config: IndexConfig = IndexConfig()): StreamingQuery = {
@@ -62,136 +72,145 @@ object IncrementalIndexer {
       .start()
   }
 
-  /** One micro-batch → one delta index (idempotent by batchId).
-    *
-    * (r6 note: right-sizing delta partitions to the batch — fewer,
-    * larger files — was tried for the live-search task fan-out and
-    * REVERTED: it cut put parallelism ~proportionally while the
-    * query-side tax turned out to be per-RELATION planning, not
-    * per-file tasks. Callers who want narrow deltas pin
-    * config.numPartitions.)
-    */
+  /** One micro-batch → one live delta index (idempotent by batchId). */
   def indexBatch(batch: DataFrame, rootDir: String, batchId: Long,
                  config: IndexConfig = IndexConfig()): Unit = {
-    if (batch.isEmpty) return
-    IndexBuilder.build(batch, s"$rootDir/deltas/delta-$batchId", config,
-      fingerprint = s"delta-$batchId")
+    val spark = batch.sparkSession
+    val dir = s"$rootDir/deltas/delta-$batchId"
+    if (Manifest.stageDone(spark, s"$dir/meta/masks")) return // a live batch replayed
+    val frontier = currentOrRecovered(spark, rootDir).map(_.compactedThrough).getOrElse(-1L)
+    require(batchId > frontier,
+      s"batch $batchId is at or below the compaction frontier $frontier of $rootDir")
+    requireStemming(spark, rootDir, liveParts(spark, rootDir), config, "put")
+    if (Manifest.readBuild(spark, dir).isEmpty) {
+      if (batch.isEmpty) return
+      IndexBuilder.build(batch, dir, config, fingerprint = s"delta-$batchId")
+    }
+    val view = viewOf(spark, rootDir, liveParts(spark, rootDir, pending = Some(batchId)))
+    val j = view.parts.indexWhere(_.dir == dir)
+    val fresh =
+      if (view.parts.length == 1) Map.empty[Long, LiveDoc]
+      else LiveDoc.collect(Seq(view.parts(j).docmap(spark) -> j)).map(d => d.docId -> d).toMap
+    val masks = view.liveDocs(spark, fresh.keys).filter(_.part != j).map { old =>
+      val d = fresh(old.docId)
+      val loser = if (old.tsMicros > d.tsMicros || (old.tsMicros == d.tsMicros && old.part > j)) d else old
+      Mask(relative(rootDir, view.parts(loser.part)), loser.docId, loser.docLen)
+    }
+    Manifest.write(spark, s"$dir/meta/masks", masks) // the delta is live from here
   }
 
-  /** The searchable view: current base + all completed deltas beyond the
-    * compaction frontier, masked by any registered tombstones.
+  /** A put or a compaction must keep the live parts' stemming flag: a
+    * mismatched put would commit a part every search then rejects, and
+    * a mismatched compaction would relabel the postings' flag.
     */
-  def composite(spark: SparkSession, rootDir: String): SearchableIndex = {
+  private def requireStemming(spark: SparkSession, rootDir: String, parts: Seq[LucyIndex],
+                              config: IndexConfig, op: String): Unit =
+    if (parts.nonEmpty) {
+      val live = CompositeIndex(parts).stemming(spark)
+      require(live == config.stemming, s"$op refused: the store at $rootDir is " +
+        s"stemming=$live, the config asks for stemming=${config.stemming}")
+    }
+
+  /** The searchable view: current base + live deltas beyond the
+    * compaction frontier, each with its masks.
+    */
+  def composite(spark: SparkSession, rootDir: String): SearchableIndex =
+    viewOf(spark, rootDir, liveParts(spark, rootDir))
+
+  /** The live parts in view order: the current base, then the deltas
+    * beyond the compaction frontier that are live — or `pending`, whose
+    * masks are being written.
+    */
+  private def liveParts(spark: SparkSession, rootDir: String,
+                        pending: Option[Long] = None): Seq[LucyIndex] = {
     val cur = currentOrRecovered(spark, rootDir)
-    val base = cur.filter(_.gen >= 0).map(c => LucyIndex(s"$rootDir/base/gen-${c.gen}"))
     val frontier = cur.map(_.compactedThrough).getOrElse(-1L)
-    val deltas = listDeltas(spark, rootDir)
-      .filter { case (id, _) => id > frontier }
-      .map(_._2)
-    val parts = CompositeIndex(base.toSeq ++ deltas)
-    val ts = readTombstones(spark, rootDir)
-    if (ts.isEmpty) parts else TombstonedIndex(parts, ts)
+    val deltas = listDeltas(spark, rootDir) ++ pending.map(id => id -> LucyIndex(s"$rootDir/deltas/delta-$id"))
+    cur.filter(_.gen >= 0).map(c => LucyIndex(s"$rootDir/base/gen-${c.gen}")).toSeq ++
+      deltas.sortBy(_._1).filter(_._1 > frontier).map(_._2)
   }
+
+  /** `parts` with the masks of every committed record that names one. */
+  private def viewOf(spark: SparkSession, rootDir: String, parts: Seq[LucyIndex]): CompositeIndex = {
+    val records = parts.flatMap(p => Manifest.read[Mask](spark, s"${p.dir}/meta/masks").getOrElse(Nil)) ++
+      deleteLog(spark, rootDir).flatMap(_._2)
+    val byPart = records.groupBy(m => s"$rootDir/${m.part}")
+    val dead = parts.map(p => byPart.get(p.dir).fold(PartMask(Array.emptyLongArray, 0L))(ms =>
+      PartMask(ms.map(_.docId).sorted.toArray, ms.map(_.docLen).sum)))
+    CompositeIndex(parts, if (dead.exists(_.docIds.nonEmpty)) dead else Nil)
+  }
+
+  private def relative(rootDir: String, part: LucyIndex): String = part.dir.stripPrefix(rootDir + "/")
 
   // ---- deletes (the lucy.js `delete()` hook analog; see
   // lucy.index.Deletes for the query-time semantics) ---------------------
 
-  /** Register url deletions: docIds are the deterministic url hashes
-    * (§8.5 — no lookup needed), committed as a generational tombstone
-    * log `deletes/del-<n>/`. Idempotent: re-deleting is a no-op at read
-    * time (tombstones union + distinct). The mask holds until `compact()`
-    * physically purges the docs and clears the log; a later re-add of
-    * the url then resurrects it.
+  /** Delete urls: mask the live version of each (docIds are the
+    * deterministic url hashes, §8.5) — one pruned probe of the live
+    * parts' docmaps — and commit the masks as a delete generation
+    * `deletes/del-<n>/`. Urls with no live version are no-ops; a later
+    * put of a deleted url adds it again.
     */
   def deleteUrls(spark: SparkSession, rootDir: String, urls: Seq[String]): Unit = {
     if (urls.isEmpty) return
-    val ids = urls.map(lucy.LucySpec.docIdForUrl).distinct.sorted
+    val parts = liveParts(spark, rootDir)
+    if (parts.isEmpty) return
+    val view = viewOf(spark, rootDir, parts)
+    val masks = view.liveDocs(spark, urls.map(lucy.LucySpec.docIdForUrl).distinct)
+      .map(d => Mask(relative(rootDir, view.parts(d.part)), d.docId, d.docLen))
+    if (masks.isEmpty) return
     val next = Manifest.generations(spark, s"$rootDir/deletes", "del").maxOption.getOrElse(0L) + 1
-    Manifest.write(spark, s"$rootDir/deletes/del-$next", ids.map(Tombstone))
+    Manifest.write(spark, s"$rootDir/deletes/del-$next", masks)
   }
 
-  /** All registered tombstones (complete generations only), sorted. */
+  /** The docIds the committed delete generations mask, sorted. */
   def readTombstones(spark: SparkSession, rootDir: String): Array[Long] =
-    tombstoneLog(spark, rootDir).flatMap(_._2).distinct.sorted.toArray
+    deleteLog(spark, rootDir).flatMap(_._2).map(_.docId).distinct.sorted.toArray
 
-  /** Committed tombstone generations with their docIds, ascending. */
-  private def tombstoneLog(spark: SparkSession, rootDir: String): Seq[(Long, Seq[Long])] =
+  /** Committed delete generations with their masks, ascending. */
+  private def deleteLog(spark: SparkSession, rootDir: String): Seq[(Long, Seq[Mask])] =
     Manifest.generations(spark, s"$rootDir/deletes", "del").flatMap { g =>
-      Manifest.read[Tombstone](spark, s"$rootDir/deletes/del-$g").map(ts => g -> ts.map(_.docId))
+      Manifest.read[Mask](spark, s"$rootDir/deletes/del-$g").map(g -> _)
     }
 
-  /** Sort-merge compaction (SURVEY.md §2.5 J5, §3.3 step 4): decode all
-    * live parts' postings, keep only each doc's LATEST version (PF2 at
-    * compaction), and re-run the shared index-write stages (range
-    * exchange + sort + streaming re-pack) into base/gen-(G+1). The merge
-    * is the same big sort the batch build uses — Spark's external sorter
-    * does the k-way work, spilling as needed.
+  /** Compaction (SURVEY.md §2.5 J5, §3.3 step 4): each live part's
+    * UNMASKED postings and docmap rows — exactly the store's contents —
+    * re-run the shared index-write stages (range exchange + sort +
+    * streaming re-pack) into base/gen-(G+1). The merge is the same big
+    * sort the batch build uses — Spark's external sorter does the k-way
+    * work, spilling as needed.
     */
   def compact(spark: SparkSession, rootDir: String,
               config: IndexConfig = IndexConfig()): BuildManifest = {
     import spark.implicits._
     val cur = currentOrRecovered(spark, rootDir)
-    val gen = cur.map(_.gen).getOrElse(-1L)
-    val frontier = cur.map(_.compactedThrough).getOrElse(-1L)
-    val deltas = listDeltas(spark, rootDir).filter(_._1 > frontier)
-    val parts = (cur.filter(_.gen >= 0).map(c => LucyIndex(s"$rootDir/base/gen-${c.gen}")).toSeq
-      ++ deltas.map(_._2))
+    val parts = liveParts(spark, rootDir)
     require(parts.nonEmpty, s"nothing to compact in $rootDir")
+    requireStemming(spark, rootDir, parts, config, "compact")
+    // the delete generations applied here are purged after the pointer
+    // commits (their records name parts that then left the view)
+    val log = deleteLog(spark, rootDir)
+    val view = viewOf(spark, rootDir, parts)
 
-    // tombstones registered up to now are purged by this compaction:
-    // their docs drop out of winners (and thus postings), and the log
-    // generations read here are cleared after the pointer commits
-    val log = tombstoneLog(spark, rootDir)
-    val tombstones = log.flatMap(_._2).distinct
-
-    val tagged = parts.zipWithIndex.map { case (p, i) =>
-      p.docmap(spark).withColumn("srcIdx", lit(i))
-    }.reduce(_ unionByName _)
-    // winner version per docId: latest warc_ts, later part breaks ties
-    val winnersAll = tagged.groupBy(col("docId"))
-      .agg(max_by(struct(col("url"), col("warc_ts"), col("lang"), col("docLen"), col("srcIdx")),
-        struct(col("warc_ts"), col("srcIdx"))).as("r"))
-      .select(col("docId"), col("r.url").as("url"), col("r.warc_ts").as("warc_ts"),
-        col("r.lang").as("lang"), col("r.docLen").as("docLen"),
-        col("r.srcIdx").as("winSrc"))
-    // r7: winners feeds BOTH the docmap write and the kept-postings join
-    // below — persist the narrow frame so the all-parts docmap union +
-    // groupBy runs once per compaction, not twice (unpersisted after
-    // the new generation commits).
-    val winners =
-      (if (tombstones.isEmpty) winnersAll
-       else winnersAll.join(
-         broadcast(tombstones.toDF("docId")), Seq("docId"), "left_anti"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val postings = parts.zipWithIndex.map { case (p, i) =>
+    val postings = view.parts.zip(view.masks).map { case (p, dead) =>
       p.segments(spark).as[SegmentRow].flatMap { r =>
         val d = PostingBlock.decode(r.toBlock)
         // per-doc posVarint substreams are self-contained (absolute
         // first + gaps): cut bytes, don't decode+re-encode (VERDICT r2)
         val ps = PostingBlock.slicePositions(r.toBlock, d.tfs)
-        d.docIds.indices.iterator.map { j =>
-          (r.term, d.docIds(j), d.tfs(j).toLong, d.docLens(j), ps(j), i)
-        }
-      }.toDF("term", "docId", "tf", "docLen", "posBytes", "srcIdx")
+        d.docIds.indices.iterator
+          .filter(j => java.util.Arrays.binarySearch(dead, d.docIds(j)) < 0)
+          .map(j => (d.docIds(j), d.docLens(j), r.term, d.tfs(j).toLong, ps(j)))
+      }.toDF("docId", "docLen", "term", "tf", "posBytes")
     }.reduce(_ unionByName _)
 
-    val kept = postings
-      .join(winners.select(col("docId"), col("winSrc")), Seq("docId"))
-      .filter(col("srcIdx") === col("winSrc"))
-      .select(col("docId"), col("docLen"), col("term"), col("tf"), col("posBytes"))
-
-    val newGen = gen + 1
-    val maxDelta = deltas.map(_._1).maxOption.getOrElse(frontier)
-    val m =
-      try IndexBuilder.writeIndex(winners.drop("winSrc"), kept,
-        s"$rootDir/base/gen-$newGen", config, fingerprint = s"gen-$newGen",
-        frontier = Some(maxDelta), // recorded for exact pointer recovery (ADVICE r2)
-        persistPostings = true) // kept = full re-decode + join: materialize once
-      finally winners.unpersist()
+    val newGen = cur.map(_.gen).getOrElse(-1L) + 1
+    val frontier = cur.map(_.compactedThrough).getOrElse(-1L)
+    val maxDelta = (frontier +: listDeltas(spark, rootDir).map(_._1)).max
+    val m = IndexBuilder.writeIndex(view.docmap(spark), postings,
+      s"$rootDir/base/gen-$newGen", config, fingerprint = s"gen-$newGen",
+      frontier = Some(maxDelta)) // recorded for exact pointer recovery (ADVICE r2)
     writeCurrent(spark, rootDir, CurrentPointer(newGen, maxDelta)) // pointer LAST
-    // purge the tombstone log generations this compaction applied (after
-    // the pointer commit: a crash before this point just re-applies them)
     val fs = new Path(rootDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     log.foreach { case (g, _) => fs.delete(new Path(s"$rootDir/deletes/del-$g"), true) }
     m
@@ -222,11 +241,9 @@ object IncrementalIndexer {
     * with a manifest rather than silently dropping the base.
     * compactedThrough comes from the base's OWN manifest frontier
     * (recorded at compaction), so already-folded deltas are NOT
-    * re-included: re-inclusion would double-count their df in
-    * CompositeIndex.termStats and shift idf even though each doc is
-    * scored once. Manifests without a frontier recover with −1 — results
-    * are then still dedup'd per doc but idf is inexact until the next
-    * compact.
+    * re-included: their masks name the old base, so their docs would be
+    * live twice. Manifests without a frontier recover with −1 and carry
+    * that double count until the next compact.
     */
   private def recoverPointer(spark: SparkSession, rootDir: String): Option[CurrentPointer] =
     Manifest.generations(spark, s"$rootDir/base", "gen").reverseIterator
@@ -237,11 +254,15 @@ object IncrementalIndexer {
   private def currentOrRecovered(spark: SparkSession, rootDir: String): Option[CurrentPointer] =
     readCurrent(spark, rootDir).orElse(recoverPointer(spark, rootDir))
 
-  /** Completed deltas (manifest present), ascending by batch id. */
+  /** Live-able deltas — build manifest and masks committed — ascending
+    * by batch id.
+    */
   def listDeltas(spark: SparkSession, rootDir: String): Seq[(Long, LucyIndex)] =
     Manifest.generations(spark, s"$rootDir/deltas", "delta")
       .map(id => id -> LucyIndex(s"$rootDir/deltas/delta-$id"))
-      .filter { case (_, idx) => Manifest.stageDone(spark, s"${idx.dir}/meta/build") }
+      .filter { case (_, idx) =>
+        Seq("build", "masks").forall(m => Manifest.stageDone(spark, s"${idx.dir}/meta/$m"))
+      }
 
   /** Bootstrap: promote an initial batch build to base/gen-0. */
   def bootstrap(pages: DataFrame, rootDir: String,

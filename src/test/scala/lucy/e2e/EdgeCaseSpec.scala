@@ -1,7 +1,6 @@
 package lucy.e2e
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
 import lucy.SparkFunSuite
 import lucy.fixtures.PagesGen
 import lucy.index._
@@ -16,12 +15,6 @@ import lucy.stream.IncrementalIndexer
 class EdgeCaseSpec extends SparkFunSuite {
 
   private lazy val tmp = Files.createTempDirectory("lucy-edge").toString
-
-  private def assertSame(fast: DataFrame, naive: DataFrame, ctx: String): Unit = {
-    val f = fast.collect().map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1))))
-    val nv = naive.collect().map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1))))
-    assert(f.toSeq === nv.toSeq, ctx)
-  }
 
   test("extreme tf and docLen: multi-byte varints end-to-end") {
     import spark.implicits._

@@ -1,12 +1,10 @@
 package lucy.e2e
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import lucy.{LucySpec, LucyStore, SparkFunSuite}
 import lucy.fixtures.PagesGen
-import lucy.index.{Ingest, Stats}
-import lucy.query.{NaiveSearch, QueryMode}
+import lucy.query.QueryMode
 
 /** The full lucy.js store lifecycle through the one public facade:
   * bootstrap → put (add + update) → delete → search (all modes) →
@@ -14,19 +12,6 @@ import lucy.query.{NaiveSearch, QueryMode}
   * engine over a from-scratch view of the store's current contents.
   */
 class LucyStoreSpec extends SparkFunSuite {
-
-  private def naiveOver(pages: DataFrame, q: String, m: QueryMode.Value, k: Int): DataFrame = {
-    val cleaned = Ingest.cleanPages(pages)
-    val docmap = Ingest.docmap(cleaned)
-    NaiveSearch.forQuery(Ingest.termTf(cleaned), Ingest.tokPos(cleaned), docmap,
-      Stats.corpusStats(docmap), q, m, k)
-  }
-
-  private def assertSame(a: DataFrame, b: DataFrame, ctx: String): Unit = {
-    val fa = a.collect().map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1))))
-    val fb = b.collect().map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1))))
-    assert(fa.toSeq === fb.toSeq, ctx)
-  }
 
   private val probes = Seq(
     ("spark shuffle", QueryMode.And, 10),
@@ -77,10 +62,9 @@ class LucyStoreSpec extends SparkFunSuite {
     val back = store.search("spark", QueryMode.Or, 500).collect().map(_.getLong(0)).toSet
     assert(back.contains(LucySpec.docIdForUrl("https://example.org/p/0")))
 
-    // ---- updated-url semantics probe (ADVICE r2): between compactions
-    // the index is additive — a replaced version's stale postings may
-    // still match; compact() restores exactness. This pins the facade
-    // doc's claim to observed behavior.
+    // ---- an update is a delete plus an add: between compactions the
+    // replaced version's postings no longer match, and every answer is
+    // bit-equal to a from-scratch view of the contents
     val p7Url = "https://example.org/p/7"
     val p7Id = LucySpec.docIdForUrl(p7Url)
     val newP7 = Seq(lucy.fixtures.Page(p7Url,
@@ -89,20 +73,21 @@ class LucyStoreSpec extends SparkFunSuite {
     store.put(newP7, batchId = 2L)
     val oldTok = LucySpec.tokenize(
       lucy.text.HtmlText.extractFromHtml(PagesGen.page(7).html)).head
-    // stale posting of the replaced version still matches pre-compact…
-    val pre = store.search(oldTok, QueryMode.Or, 1000).collect().map(_.getLong(0)).toSet
-    assert(pre.contains(p7Id), s"pre-compact: additive index keeps stale '$oldTok' posting")
-    // …while the new version's terms are live immediately
-    val newHits = store.search("xylophone", QueryMode.Or, 10).collect().map(_.getLong(0)).toSet
-    assert(newHits === Set(p7Id))
-    // compaction merges the update: exact again vs a from-scratch view
-    store.compact()
     val contents = survivors
       .union(spark.range(0, 1).as[Long].map(PagesGen.page _).toDF())
       .filter(col("url") =!= p7Url)
       .union(newP7)
+    val pre = store.search(oldTok, QueryMode.Or, 1000).collect().map(_.getLong(0)).toSet
+    assert(!pre.contains(p7Id), s"pre-compact: the replaced version's '$oldTok' posting is masked")
+    val newHits = store.search("xylophone", QueryMode.Or, 10).collect().map(_.getLong(0)).toSet
+    assert(newHits === Set(p7Id))
     probes.foreach { case (q, m, k) =>
       assertSame(store.search(q, m, k), naiveOver(contents, q, m, k), s"updated[$q/$m]")
+    }
+    // compaction changes no answer
+    store.compact()
+    probes.foreach { case (q, m, k) =>
+      assertSame(store.search(q, m, k), naiveOver(contents, q, m, k), s"updated+compacted[$q/$m]")
     }
     val post = store.search(oldTok, QueryMode.Or, 1000).collect().map(_.getLong(0)).toSet
     assert(!post.contains(p7Id), "post-compact: replaced version's postings are purged")

@@ -84,15 +84,23 @@ class MetadataCodecSpec extends SparkFunSuite {
   }
 
   test("tombstones across generations read back sorted and distinct; torn and stray dirs ignored") {
+    import spark.implicits._
+    import IncrementalIndexer.Mask
+    import lucy.LucySpec.docIdForUrl
     val root = s"$tmp/tomb"
     val u = (0 until 6).map(i => s"https://example.org/t/$i")
+    IncrementalIndexer.bootstrap(u.zipWithIndex.map { case (url, i) =>
+      lucy.fixtures.Page(url, new java.sql.Timestamp(i * 1000L), null, s"text $i", "en")
+    }.toDF(), root)
     IncrementalIndexer.deleteUrls(spark, root, Seq(u(3), u(1), u(2), u(1)))
-    IncrementalIndexer.deleteUrls(spark, root, Seq(u(2), u(5)))
-    writeLine(s"$root/deletes/del-9", s"""{"docId":${lucy.LucySpec.docIdForUrl(u(4))}}""")
+    IncrementalIndexer.deleteUrls(spark, root, Seq(u(2), u(5))) // u(2) is dead already
+    writeLine(s"$root/deletes/del-9", s"""{"part":"base/gen-0","docId":${docIdForUrl(u(4))},"docLen":2}""")
     fs.mkdirs(new Path(s"$root/deletes/del-old"))
     fs.mkdirs(new Path(s"$root/deletes/9"))
-    val want = Seq(1, 2, 3, 5).map(i => lucy.LucySpec.docIdForUrl(u(i))).distinct.sorted
+    val want = Seq(1, 2, 3, 5).map(i => docIdForUrl(u(i))).sorted
     assert(IncrementalIndexer.readTombstones(spark, root).toSeq === want)
     assert(Manifest.generations(spark, s"$root/deletes", "del") === Seq(1L, 2L, 9L))
+    assert(Manifest.read[Mask](spark, s"$root/deletes/del-2").map(_.map(m => (m.part, m.docId)))
+      === Some(Seq(("base/gen-0", docIdForUrl(u(5))))))
   }
 }

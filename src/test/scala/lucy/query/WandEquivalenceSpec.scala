@@ -27,18 +27,6 @@ class WandEquivalenceSpec extends SparkFunSuite {
       Ingest.docmap(cleaned), Stats.corpusStats(Ingest.docmap(cleaned)))
   }
 
-  private def assertSame(fast: DataFrame, naive: DataFrame, ctx: String): Unit = {
-    val f = fast.collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
-    val nv = naive.collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
-    assert(f.length === nv.length, s"$ctx: row count")
-    f.zip(nv).zipWithIndex.foreach { case (((fd, fs, fn), (nd, ns, nn)), i) =>
-      assert(fd === nd, s"$ctx rank $i docId")
-      assert(java.lang.Double.doubleToLongBits(fs) === java.lang.Double.doubleToLongBits(ns),
-        s"$ctx rank $i score bits: fast=$fs naive=$ns")
-      assert(fn === nn, s"$ctx rank $i nTerms")
-    }
-  }
-
   private val queries = Seq(
     ("spark", QueryMode.And, 10),
     ("spark shuffle", QueryMode.Phrase, 10),      // head-head phrase
@@ -128,7 +116,7 @@ class WandEquivalenceSpec extends SparkFunSuite {
     // docs {10, 20, Long.MaxValue}. The ADVICE r1 bug treated MaxValue as
     // the exhausted sentinel and could never score it.
     def blocksFor(term: String, ti: Int, docs: Seq[Long]) =
-      (ti, PostingBlock.pack(lucy.Hashing.termHash(term), term, 0,
+      (ti, 0, PostingBlock.pack(lucy.Hashing.termHash(term), term, 0,
         docs.iterator.map(d => (d, 1, 5, PostingBlock.encodePositions(Array(0))))).toArray)
     val plan = QueryPlan(Array("aa", "bb"), Array(2L, 3L), n = 10, avgdl = 5.0,
       conjunctive = true, k = 10)

@@ -1,7 +1,6 @@
 package lucy.stream
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import lucy.SparkFunSuite
 import lucy.fixtures.{Page, PagesGen}
@@ -20,18 +19,6 @@ class IncrementalSpec extends SparkFunSuite {
     ("spark shuffle", QueryMode.And, 10),
     ("index posting", QueryMode.Or, 15),
     ("wand", QueryMode.Or, 10))
-
-  private def partsOf(idx: SearchableIndex): Seq[LucyIndex] = idx match {
-    case c: CompositeIndex => c.parts
-    case t: TombstonedIndex => partsOf(t.inner)
-    case l: LucyIndex => Seq(l)
-  }
-
-  private def assertBitEqual(a: DataFrame, b: DataFrame, ctx: String): Unit = {
-    val fa = a.collect().map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1))))
-    val fb = b.collect().map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1))))
-    assert(fa.toSeq === fb.toSeq, ctx)
-  }
 
   test("3 url-disjoint micro-batches == 1 batch build; compaction preserves") {
     import spark.implicits._
@@ -57,7 +44,7 @@ class IncrementalSpec extends SparkFunSuite {
     val stats = Stats.corpusStats(docmap)
     assert(composite.corpusStats(spark) === stats)
     for ((qs, m, k) <- queries) {
-      assertBitEqual(Searcher.search(spark, composite, qs, m, k),
+      assertSame(Searcher.search(spark, composite, qs, m, k),
         NaiveSearch.search(termTf, docmap, stats, qs, m, k), s"pre-compact[$qs]")
     }
 
@@ -65,9 +52,9 @@ class IncrementalSpec extends SparkFunSuite {
     val cm = IncrementalIndexer.compact(spark, root)
     assert(cm.docs === stats.n)
     val after = IncrementalIndexer.composite(spark, root)
-    assert(partsOf(after).length === 1)
+    assert(after.parts.length === 1)
     for ((qs, m, k) <- queries) {
-      assertBitEqual(Searcher.search(spark, after, qs, m, k),
+      assertSame(Searcher.search(spark, after, qs, m, k),
         NaiveSearch.search(termTf, docmap, stats, qs, m, k), s"post-compact[$qs]")
     }
   }
@@ -141,7 +128,7 @@ class IncrementalSpec extends SparkFunSuite {
     IncrementalIndexer.indexBatch(PagesGen.recrawl(spark, 60, 1000000L), root, 0L)
     IncrementalIndexer.compact(spark, root)
     val idx = IncrementalIndexer.composite(spark, root)
-    assert(partsOf(idx).length === 1)
+    assert(idx.parts.length === 1)
 
     // reference: naive over the deduped union (latest warc_ts wins)
     val union = PagesGen.pages(spark, 120).unionByName(PagesGen.recrawl(spark, 60, 1000000L))
@@ -150,7 +137,7 @@ class IncrementalSpec extends SparkFunSuite {
     val stats = Stats.corpusStats(docmap)
     assert(idx.corpusStats(spark).n === stats.n) // no duplicate docs
     for ((qs, m, k) <- Seq(("recrawl", QueryMode.Or, 100), ("spark recrawl", QueryMode.And, 10))) {
-      assertBitEqual(Searcher.search(spark, idx, qs, m, k),
+      assertSame(Searcher.search(spark, idx, qs, m, k),
         NaiveSearch.search(termTf, docmap, stats, qs, m, k), s"recrawl[$qs]")
     }
     // exactly-once: replaying a batch id is a no-op
@@ -171,7 +158,7 @@ class IncrementalSpec extends SparkFunSuite {
     val delUrls = (0L until 300L by 5).map(i => s"https://example.org/p/$i")
     IncrementalIndexer.deleteUrls(spark, root, delUrls)
     val masked = IncrementalIndexer.composite(spark, root)
-    assert(masked.isInstanceOf[TombstonedIndex], "registered deletes must mask the view")
+    assert(masked.masks.map(_.length).sum === delUrls.length, "registered deletes must mask the view")
 
     // the oracle: naive engine over the surviving corpus only
     val surviving = all.filter(!col("url").isin(delUrls.map(_.asInstanceOf[Any]): _*))
@@ -179,7 +166,7 @@ class IncrementalSpec extends SparkFunSuite {
     val (docmap, termTf) = (Ingest.docmap(cleaned), Ingest.termTf(cleaned))
     val stats = Stats.corpusStats(docmap)
     queries.foreach { case (qs, m, k) =>
-      assertBitEqual(
+      assertSame(
         Searcher.search(spark, masked, qs, m, k),
         NaiveSearch.search(termTf, docmap, stats, qs, m, k), s"masked[$qs]")
     }
@@ -192,13 +179,14 @@ class IncrementalSpec extends SparkFunSuite {
     // compaction physically purges: tombstone log cleared, postings gone
     IncrementalIndexer.compact(spark, root)
     val after = IncrementalIndexer.composite(spark, root)
-    assert(!after.isInstanceOf[TombstonedIndex], "purged log must not mask")
+    assert(after.masks.forall(_.isEmpty), "purged log must not mask")
+    assert(IncrementalIndexer.readTombstones(spark, root).isEmpty, "log purged")
     assert(after.docmap(spark).count() === docmap.count())
     val decodedIds = after.segments(spark).drop("srcPart").as[SegmentRow]
       .flatMap(r => PostingBlock.decode(r.toBlock).docIds).collect().toSet
     assert(decodedIds.intersect(deletedIds).isEmpty, "purge must drop postings")
     queries.foreach { case (qs, m, k) =>
-      assertBitEqual(
+      assertSame(
         Searcher.search(spark, after, qs, m, k),
         NaiveSearch.search(termTf, docmap, stats, qs, m, k), s"compacted[$qs]")
     }
@@ -273,13 +261,13 @@ class IncrementalSpec extends SparkFunSuite {
     fs.delete(new Path(s"$root/current"), true)
     assert(IncrementalIndexer.readCurrent(spark, root) === None)
     val comp = IncrementalIndexer.composite(spark, root)
-    assert(partsOf(comp).exists(_.dir.endsWith("gen-1")), "recovered view must serve the base")
+    assert(comp.parts.exists(_.dir.endsWith("gen-1")), "recovered view must serve the base")
     assert(comp.segments(spark).count() > 0)
 
     // ADVICE r2: the recovered frontier comes from the base generation's
     // OWN manifest, so the already-compacted delta-0 is NOT re-included —
     // df (hence idf) is exact, not merely per-doc-deduplicated
-    assert(partsOf(comp).length === 1, "compacted delta must not be re-included on recovery")
+    assert(comp.parts.length === 1, "compacted delta must not be re-included on recovery")
     val cleaned160 = Ingest.cleanPages(PagesGen.pages(spark, 160))
     val wantDf = Ingest.termTf(cleaned160).groupBy($"term").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

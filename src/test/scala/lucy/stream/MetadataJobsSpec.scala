@@ -2,12 +2,14 @@ package lucy.stream
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.col
 import lucy.SparkFunSuite
 import lucy.fixtures.PagesGen
 import lucy.index._
 
-/** Store metadata (pointer, tombstone log, build manifests) is committed
-  * and read on the driver: none of these calls may start a Spark job.
+/** Store metadata (pointer, masks, build manifests) is committed and
+  * read on the driver: composing a view and its corpus stats start no
+  * Spark job; a delete starts one: its docmap probe.
   */
 class MetadataJobsSpec extends SparkFunSuite {
 
@@ -20,25 +22,31 @@ class MetadataJobsSpec extends SparkFunSuite {
     IncrementalIndexer.indexBatch(
       spark.range(120, 160).as[Long].map(PagesGen.page _).toDF(), root, 0L)
     val urls = (0L until 10L).map(i => s"https://example.org/p/$i")
+    // the indexed ones (the lang filter drops some pages)
+    val deleted = Ingest.cleanPages(PagesGen.pages(spark, 10)).select("docId").as[Long]
+      .collect().sorted.toSeq
 
     // the counter sees jobs at all
     assert(jobsIn(spark.range(3).count())._2 > 0)
 
-    assert(jobsIn(IncrementalIndexer.deleteUrls(spark, root, urls))._2 === 0, "deleteUrls")
+    // the delete's one probe of the live docmaps (their schemas are known
+    // from the builds), a job every later view build used to pay for its
+    // corpus stats
+    assert(jobsIn(IncrementalIndexer.deleteUrls(spark, root, urls))._2 === 1, "deleteUrls")
     val (view, viewJobs) = jobsIn(IncrementalIndexer.composite(spark, root))
     assert(viewJobs === 0, "composite()")
-    view match {
-      case t: TombstonedIndex =>
-        assert(t.tombstoneIds.length === 10)
-        assert(t.inner.asInstanceOf[CompositeIndex].parts.length === 2)
-      case other => fail(s"expected a tombstoned base+delta view, got $other")
-    }
+    assert(view.parts.length === 2)
+    assert(view.masks.map(_.toSeq) === Seq(deleted, Nil))
+    val (stats, statsJobs) = jobsIn(view.corpusStats(spark))
+    assert(statsJobs === 0, "corpusStats of base + delta + delete")
+    val live = PagesGen.pages(spark, 160).filter(!col("url").isin(urls: _*))
+    assert(stats === Stats.corpusStats(Ingest.docmap(Ingest.cleanPages(live))))
     val (cur, curJobs) = jobsIn(IncrementalIndexer.readCurrent(spark, root))
     assert(curJobs === 0, "readCurrent")
     assert(cur === Some(IncrementalIndexer.CurrentPointer(0L, -1L)))
     val (ts, tsJobs) = jobsIn(IncrementalIndexer.readTombstones(spark, root))
     assert(tsJobs === 0, "readTombstones")
-    assert(ts.toSeq === urls.map(lucy.LucySpec.docIdForUrl).sorted)
+    assert(ts.toSeq === deleted)
     val (deltas, deltaJobs) = jobsIn(IncrementalIndexer.listDeltas(spark, root))
     assert(deltaJobs === 0, "listDeltas")
     assert(deltas.map(_._1) === Seq(0L))
