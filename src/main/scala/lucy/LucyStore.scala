@@ -23,66 +23,37 @@ import lucy.stream.IncrementalIndexer
   *   - `compact()`    — fold the parts' unmasked rows into a new base
   *     generation; answers do not change.
   *
-  * A serving QueryEngine (block cache + stats cache) is rebuilt whenever
-  * the underlying view changes — mutation invalidates, reads are warm in
-  * between. Single-writer semantics (one driver mutates a store), same
-  * as lucy.js's single JS thread.
+  * Concurrency: a single writer (one driver thread mutates a store), as
+  * lucy.js's single JS thread is; concurrent searches share one
+  * QueryEngine per view. A mutation commits, drops the cached engine
+  * and returns; the next search builds the new view's engine on its own
+  * thread. Nothing runs in the background, and `close()` releases the
+  * delta pins.
   */
 final class LucyStore(spark: SparkSession, rootDir: String,
                       config: IndexConfig = IndexConfig()) {
 
-  @volatile private var engineCache: Option[QueryEngine] = None
+  private var engineCache: Option[QueryEngine] = None
 
-  private def invalidate(): Unit = {
-    synchronized { engineCache = None }
-    warmAsync()
-  }
+  private def invalidate(): Unit = synchronized { engineCache = None }
 
-  // DELTA relation warm cache (r6, VERDICT r5 next-round #6): a
-  // mutation invalidates the composite ENGINE, but the part directories
-  // underneath (base generation, completed deltas) are immutable — only
-  // compaction retires them. The r5 store soak paid for ignoring that:
-  // the first 5 live searches over base+deltas cost 11.1 s vs 3.5 s
-  // post-compaction, because every rebuilt engine re-planned every
-  // part's relations from disk. Here each DELTA's segments / term-stats
-  // / docmap relations are persisted ONCE per directory and survive
-  // engine invalidation; Spark's plan-based cache substitution
-  // (CacheManager matches any later scan of the same path) makes the
-  // rebuilt composite's unions hit the in-memory copies without
-  // CompositeIndex knowing the cache exists. The BASE generation is
-  // deliberately NOT pinned: at corpus scale the base cannot live in
-  // executor memory and its range-sorted parquet already serves pruned
-  // termHash probes — deltas are the small, hot, every-query relations
-  // (exactly lucy.js's in-memory recent-writes picture over a big
-  // store). A put/delete warms only its NEW delta; compaction prunes
-  // entries whose directories left the live view (unpersist —
-  // block-manager memory stays bounded by the live delta set).
-  private val warmedParts = scala.collection.concurrent.TrieMap[String, Seq[org.apache.spark.sql.Dataset[_]]]()
-
-  // DELIBERATELY NOT persisted: the composite term-stats aggregation
-  // (union of parts → groupBy term). Term lookups and prefix expansion
-  // both filter on the grouping column, so Catalyst pushes the
-  // predicate below the Aggregate into every part's scan — the base's
-  // term-SORTED stats parquet serves them as min/max-pruned range
-  // probes and the delta scans hit the part caches above; each lookup
-  // is one delta-sized job. An earlier r6 draft persisted the full
-  // aggregation per view generation instead: that materialization is a
-  // full-VOCABULARY shuffle paid per MUTATION on the warm-behind
-  // thread, racing ingest — a non-starter at corpus-scale base
-  // vocabulary — and the interleaved 1 M-doc A/B
-  // (store_ab_vs_*/store_ab_novs_*, BENCH/BASELINE.md round 6) showed
-  // it buys nothing: steady-state warm live search identical
-  // (2.37/2.50 s vs 2.32/2.38 s per 5 queries), zero-gap first search
-  // identical, puts parity-to-better without it (best-of 19.3 s vs
-  // 22.7 s for 5 × 50 k). The pushdown path wins on scale grounds at
-  // equal measured cost.
+  // Delta pin cache, keyed by directory and guarded by the store's lock
+  // (engine builds and close() hold it). Part directories are immutable
+  // until compaction retires them, so each live DELTA's segments, term
+  // stats and docmap are persisted once and outlive every engine that
+  // a mutation drops; Spark's CacheManager substitutes the pinned copy
+  // into any later scan of the same path, so a rebuilt engine's unions
+  // read deltas from memory without knowing the cache exists. The base
+  // is never pinned: at corpus scale it does not fit executor memory,
+  // and its term-sorted parquet already serves pruned probes. An entry
+  // is unpersisted once its directory leaves the live view. Measured on
+  // store_churn (4 cores, seeds 61–66, medians): without the pins,
+  // search_qps 12.0 and search_p50_ms 624 ms; with them, 13.3 and 551 ms.
+  private val warmedParts = scala.collection.mutable.Map[String, Seq[org.apache.spark.sql.Dataset[_]]]()
 
   private def syncPartCache(v: SearchableIndex): Unit = {
-    val live = v.parts.map(_.dir).toSet
-    val liveDeltas = live.filter(_.contains("/deltas/"))
-    warmedParts.keys.filterNot(liveDeltas.contains).toSeq.foreach { d =>
-      warmedParts.remove(d).foreach(_.foreach(_.unpersist()))
-    }
+    val liveDeltas = v.parts.map(_.dir).filter(_.contains("/deltas/")).toSet
+    warmedParts.keys.filterNot(liveDeltas.contains).toSeq.foreach(unpin)
     liveDeltas.foreach { d =>
       warmedParts.getOrElseUpdate(d, {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -91,6 +62,8 @@ final class LucyStore(spark: SparkSession, rootDir: String,
       })
     }
   }
+
+  private def unpin(dir: String): Unit = warmedParts.remove(dir).foreach(_.foreach(_.unpersist()))
 
   private def engine: QueryEngine = synchronized {
     engineCache.getOrElse {
@@ -102,63 +75,15 @@ final class LucyStore(spark: SparkSession, rootDir: String,
     }
   }
 
-  // Warm-BEHIND: after every mutation the next engine's one-time costs
-  // — the relations' file listing and footers, the new delta's caches — are
-  // paid on a background daemon thread, so the first post-mutation
-  // search finds a warm engine instead of paying them inline (lucy.js
-  // updates its in-memory index ON put; this is the async cluster
-  // analog). Purely a read-side warm: single-writer semantics are
-  // untouched, and a search racing the warm simply shares the same
-  // synchronized engine build / lazy stats computation instead of
-  // duplicating it. Back-to-back mutations coalesce (one pending warm).
-  private val warmPool = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
-    val t = new Thread(r, "lucystore-warm"); t.setDaemon(true); t
-  }
-  private val warmQueued = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def warmAsync(): Unit =
-    if (warmQueued.compareAndSet(false, true))
-      warmPool.submit(new Runnable {
-        def run(): Unit = {
-          warmQueued.set(false) // before the work: a mutation mid-warm re-queues
-          try {
-            val e = engine
-            // corpus stats (manifest arithmetic), then the relation-level
-            // one-time costs (file listing, parquet footers, union-plan analysis)
-            // via pruned no-data probes: with the warm given think-time
-            // to finish, the first live search costs the same as a
-            // steady one. Deliberately SEQUENTIAL: under FIFO
-            // scheduling a parallel warm hogs executor slots exactly
-            // when a zero-gap search races it.
-            e.warmPlans()
-            // materialize the delta relation caches (delta-sized jobs;
-            // idempotent — in-memory hits after the first build)
-            warmedParts.values.flatten.foreach(_.count())
-          } catch {
-            case ex if scala.util.control.NonFatal(ex) =>
-              // a persistent warm failure must never be silent — every
-              // first search would degrade with no trace. The engine stays correct (searches build
-              // it lazily); this is purely a performance warning.
-              log.warn(s"background warm failed for $rootDir — first " +
-                "post-mutation searches will pay the engine build inline", ex)
-          }
-        }
-      })
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Release everything this store pinned (ADVICE r6 #1): shuts down
-    * the warm executor and unpersists the delta relation caches. The
-    * store remains usable afterwards (caches rebuild lazily; the warm
-    * thread is simply gone), but the intended use is end-of-life for
-    * long-lived drivers and test suites that open many stores.
+  /** Release everything this store pinned: unpersists the delta
+    * relation caches and drops the engine. The store remains usable
+    * afterwards (the next search rebuilds both); the intended use is
+    * end-of-life for long-lived drivers and test suites that open many
+    * stores.
     */
-  def close(): Unit = {
-    warmPool.shutdownNow()
-    warmedParts.keys.toSeq.foreach { d =>
-      warmedParts.remove(d).foreach(_.foreach(_.unpersist()))
-    }
-    synchronized { engineCache = None }
+  def close(): Unit = synchronized {
+    warmedParts.keys.toSeq.foreach(unpin)
+    engineCache = None
   }
 
   /** The current searchable view (base + deltas, masked). */

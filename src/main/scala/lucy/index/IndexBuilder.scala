@@ -97,14 +97,13 @@ trait SearchableIndex {
     }.reduce(_ unionByName _)
   }
 
-  /** Raw per-term df/cf summed over the parts, masked postings included
-    * (see lookupTerms).
+  /** The parts' term-stats rows, unioned: one row per (part, term) with
+    * that part's raw df/cf, masked postings included. A term's view-wide
+    * df/cf is the sum of its rows (Stats.lookupTerms sums on the driver;
+    * lookupTerms also subtracts masked postings).
     */
   def termStats(spark: SparkSession): DataFrame =
-    if (parts.length == 1) parts.head.termStats(spark)
-    else parts.map(_.termStats(spark)).reduce(_ unionByName _)
-      .groupBy(col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+    parts.map(_.termStats(spark)).reduce(_ unionByName _)
 
   /** Query-term stats for planning (Deletes.liveTerms). */
   def lookupTerms(spark: SparkSession, terms: Seq[String]): Map[String, TermStats] =

@@ -28,9 +28,9 @@ case class BuildManifest(
     /** For a compacted base generation: the highest delta batchId folded
       * into it (IncrementalIndexer.compact). Lets a lost `current`
       * pointer be recovered EXACTLY — re-including an already-compacted
-      * delta would double-count df in CompositeIndex.termStats and shift
-      * idf. None (plain batch builds, older manifests) means "no deltas
-      * folded" (frontier −1).
+      * delta would double-count df in the view's summed term stats
+      * (Stats.lookupTerms) and shift idf. None (plain batch builds,
+      * older manifests) means "no deltas folded" (frontier −1).
       */
     @JsonDeserialize(contentAs = classOf[java.lang.Long]) // else small values box as Integer
     frontier: Option[Long] = None,

@@ -34,15 +34,17 @@ object Stats {
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
 
   /** Driver-side lookup for a small set of query terms — one tiny job
-    * with an `isin` pushdown (SURVEY.md §3.2 stage 2).
+    * with an `isin` pushdown (SURVEY.md §3.2 stage 2) and no exchange.
+    * A view's term stats hold one row per (part, term); the at most
+    * parts × terms rows are summed per term here.
     */
   def lookupTerms(termStatsDf: DataFrame, terms: Seq[String]): Map[String, TermStats] = {
     if (terms.isEmpty) return Map.empty
     import org.apache.spark.sql.Row
     termStatsDf.filter(col("term").isin(terms: _*))
       .select("term", "df", "cf").collect()
-      .map { case Row(t: String, df: Long, cf: Long) => t -> TermStats(t, df, cf) }
-      .toMap
+      .map { case Row(t: String, df: Long, cf: Long) => TermStats(t, df, cf) }
+      .groupMapReduce(_.term)(identity)((a, b) => TermStats(a.term, a.df + b.df, a.cf + b.cf))
   }
 
   /** Prefix expansion (§8.6 r2): matching terms in ascending order,

@@ -11,16 +11,20 @@ import lucy.index.{CorpusStats, Deletes, SearchableIndex, Stats, TermStats}
   * in-memory live index for a query-serving deployment, and the one
   * place a query string becomes a [[QueryPlan]].
   *
-  * What "warm" buys per query (measured: ~2s cold → ~0.1–0.3s warm at
-  * 270k docs):
-  *  - corpus stats read once (manifest), not per query;
-  *  - term df lookups cached per term (first query for a term pays one
-  *    tiny pruned job; repeats are map hits);
-  *  - `warm()` pins segments + term stats into the Spark block-manager
-  *    cache (InMemoryRelation) — subsequent scans read columnar batches
-  *    from memory with batch-level stat pruning on termHash instead of
-  *    parquet from disk. Safe because a LucyIndex dir is immutable
-  *    (compaction writes a NEW generation dir).
+  * What one engine per view buys, query after query:
+  *  - corpus stats computed once (manifest arithmetic), not per query;
+  *  - term df lookups and prefix expansions cached per term (the first
+  *    query for a term pays one tiny pruned job; repeats are map hits);
+  *  - gathered posting blocks cached per term (BlockCache);
+  *  - one shared relation per artifact, so file listing and footer
+  *    reads are paid once.
+  *
+  * `warm()` additionally pins segments and term stats into the Spark
+  * block-manager cache (InMemoryRelation): later scans read columnar
+  * batches from memory with batch-level stat pruning on termHash instead
+  * of parquet from disk. Safe because a LucyIndex dir is immutable
+  * (compaction writes a NEW generation dir). A live store never calls
+  * it — its base must not be pinned (LucyStore pins deltas only).
   *
   * Query tokens are stemmed iff the index's terms were: the flag comes
   * from the parts' build manifests (`SearchableIndex.stemming`).
@@ -61,21 +65,6 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     segmentsDf.cache().count()
     termStatsDf.cache().count()
     stats
-    this
-  }
-
-  /** Bounded, pin-free relation warm: forces the one-time costs a first
-    * search would otherwise pay inline — file listing, parquet footer
-    * reads, plan analysis of the composite segments/term-stats unions —
-    * via empty-term pruned probes ("" can never be a token, and the
-    * term-sorted stats files' min/max exclude it, so no data pages are
-    * read). Unlike [[warm]], nothing is cached: right for a live store
-    * view whose base must not be pinned.
-    */
-  def warmPlans(): this.type = {
-    stats
-    termStatsDf.filter(col("term") === "").count()
-    segmentsDf.filter(col("term") === "").count()
     this
   }
 

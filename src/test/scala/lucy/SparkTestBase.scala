@@ -29,9 +29,8 @@ abstract class SparkFunSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
 
   /** Runs `body` and counts the Spark jobs it started from this thread
-    * (tagged through a local property, so jobs of other threads — e.g. a
-    * store's warm-behind — never count). The listener bus is drained
-    * before the count is read.
+    * (tagged through a local property, so jobs that other threads start
+    * never count). The listener bus is drained before the count is read.
     */
   protected def jobsIn[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext

@@ -223,9 +223,10 @@ class IncrementalSpec extends SparkFunSuite {
     assert(idx.corpusStats(spark) === stats, "replay must not inflate N/avgdl")
     val expectedDf = Ingest.termTf(cleaned).groupBy($"term").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val gotDf = idx.termStats(spark).select("term", "df")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val gotDf = idx.lookupTerms(spark, expectedDf.keys.toSeq).map { case (t, st) => t -> st.df }
     assert(gotDf === expectedDf, "replay must not inflate df")
+    assert(idx.termStats(spark).select("term").distinct().as[String].collect().toSet
+      === expectedDf.keySet, "no term beyond the reference vocabulary")
   }
 
   test("pointer: generational commits survive crash windows; lost pointer recovers (ADVICE r1)") {
@@ -271,8 +272,9 @@ class IncrementalSpec extends SparkFunSuite {
     val cleaned160 = Ingest.cleanPages(PagesGen.pages(spark, 160))
     val wantDf = Ingest.termTf(cleaned160).groupBy($"term").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val recDf = comp.termStats(spark).select("term", "df")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val recDf = comp.lookupTerms(spark, wantDf.keys.toSeq).map { case (t, st) => t -> st.df }
     assert(recDf === wantDf, "recovered view df must be exact (ADVICE r2 double-count)")
+    assert(comp.termStats(spark).select("term").distinct().as[String].collect().toSet
+      === wantDf.keySet, "no term beyond the reference vocabulary")
   }
 }
