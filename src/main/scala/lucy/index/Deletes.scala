@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *
   *  - N and avgdl exclude the dead docs (`SearchableIndex.totals`);
   *  - df per query term is the raw index df MINUS the term's postings in
-  *    dead pairs (`deletedDf`: a pruned scan of the query terms' blocks
-  *    only — never a corpus scan);
+  *    dead pairs (`deadPostings` over blocks a search gathers anyway, or
+  *    `deletedDf`: a pruned scan of the query terms' blocks only — never
+  *    a corpus scan);
   *  - a WAND cursor over a part never lands on that part's dead docIds.
   *
   * The masks ship in the query plan's task closure; compaction drops
@@ -49,24 +50,43 @@ object Deletes {
   val maxTombstones: Int = 1 << 20
 
   /** Query-term stats over a view's relations: the raw df/cf lookup,
-    * then df minus the term's masked postings (rawDf keeps the physical
-    * count); a term with no live posting is absent.
+    * then df minus the term's masked postings (`subtract`).
     */
   def liveTerms(spark: SparkSession, termStats: DataFrame, segments: => DataFrame,
                 masks: Seq[Array[Long]], terms: Seq[String]): Map[String, TermStats] = {
     val raw = Stats.lookupTerms(termStats, terms)
-    if (raw.isEmpty || masks.forall(_.isEmpty)) return raw
-    val dead = deletedDf(spark, segments, raw.keys.toSeq, masks)
+    if (raw.isEmpty || masks.forall(_.isEmpty)) raw
+    else subtract(raw, deletedDf(spark, segments, raw.keys.toSeq, masks))
+  }
+
+  /** Raw term stats minus each term's `dead` postings; rawDf keeps the
+    * physical count, and a term with no live posting is absent.
+    */
+  def subtract(raw: Map[String, TermStats], dead: Map[String, Long]): Map[String, TermStats] =
     raw.flatMap { case (t, st) =>
       val df = st.df - dead.getOrElse(t, 0L)
       if (df <= 0) None else Some(t -> st.copy(df = df, rawDf = st.df))
     }
-  }
+
+  /** Postings of one part's `blocks` whose docId the sorted `dead` names.
+    * A block whose [firstDocId, lastDocId] holds no dead id is not
+    * decoded.
+    */
+  def deadPostings(blocks: Iterable[PostingBlock], dead: Array[Long]): Long =
+    if (dead.isEmpty) 0L
+    else blocks.iterator.map { b =>
+      val at = java.util.Arrays.binarySearch(dead, b.firstDocId)
+      val from = if (at >= 0) at else -at - 1
+      if (from == dead.length || dead(from) > b.lastDocId) 0L
+      else PostingBlock.decode(b).docIds.count(java.util.Arrays.binarySearch(dead, _) >= 0).toLong
+    }.sum
 
   /** Per-term count of postings in dead (srcPart, docId) pairs — a
     * pruned scan of ONLY the given terms' blocks in the masked parts
     * (termHash isin pushdown), so the cost scales with the query, not
-    * the corpus. One job; returns a tiny per-term map.
+    * the corpus. One job; returns a tiny per-term map. It decodes every
+    * block it reads, so it also serves as the reference for the skipping
+    * `deadPostings` (QueryJobsSpec).
     */
   def deletedDf(spark: SparkSession, segments: DataFrame, terms: Seq[String],
                 masks: Seq[Array[Long]]): Map[String, Long] = {

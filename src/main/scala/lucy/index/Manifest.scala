@@ -131,12 +131,17 @@ object Manifest {
     fs.create(new Path(d, "_SUCCESS"), true).close()
   }
 
-  /** The records of a committed dir; None while `_SUCCESS` is missing. */
+  /** The records of a committed dir; None while `_SUCCESS` is missing,
+    * and None too for a dir deleted after that check (a purge racing the
+    * read).
+    */
   def read[T: ClassTag](spark: SparkSession, dir: String): Option[Seq[T]] = {
     val d = new Path(dir)
     val fs = fsOf(spark, d)
     if (!fs.exists(new Path(d, "_SUCCESS"))) return None
-    val in: java.io.InputStream = fs.open(new Path(d, DataFile))
+    val in: java.io.InputStream =
+      try fs.open(new Path(d, DataFile))
+      catch { case _: java.io.FileNotFoundException => return None }
     try Some(json.readerFor(classTag[T].runtimeClass).readValues[T](in).readAll().asScala.toSeq)
     finally in.close()
   }

@@ -2,29 +2,39 @@ package lucy.query
 
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{StringType, StructField}
 import lucy.LucySpec
-import lucy.index.{CorpusStats, Deletes, SearchableIndex, Stats, TermStats}
+import lucy.index.{CorpusStats, Deletes, LucyIndex, PostingBlock, SearchableIndex, Stats, TermStats}
 
-/** Warm serving handle over an immutable index — the analog of lucy.js's
-  * in-memory live index for a query-serving deployment, and the one
-  * place a query string becomes a [[QueryPlan]].
+/** Warm serving handle over an immutable index view — the analog of
+  * lucy.js's in-memory live index for a query-serving deployment, and
+  * the one place a query string becomes a [[QueryPlan]].
   *
-  * What one engine per view buys, query after query:
+  * What an engine caches, query after query:
   *  - corpus stats computed once (manifest arithmetic), not per query;
-  *  - term df lookups and prefix expansions cached per term (the first
-  *    query for a term pays one tiny pruned job; repeats are map hits);
-  *  - gathered posting blocks cached per term (BlockCache);
-  *  - one shared relation per artifact, so file listing and footer
-  *    reads are paid once.
+  *  - per part and term, the raw df/cf and the gathered posting blocks
+  *    (BlockCache, keyed by part dir): a query reads only the (part,
+  *    term) pairs the cache lacks, in one pruned job per step over just
+  *    those parts' relations. Part dirs are immutable, so these entries
+  *    outlive the view: LucyStore hands one cache to each engine it
+  *    builds, and a mutation leaves the unchanged parts' entries warm;
+  *  - per term, the view's live df (the parts' raw dfs summed, minus the
+  *    postings its masks name), and prefix expansions;
+  *  - one shared relation per part and artifact, so file listing and
+  *    footer reads are paid once.
+  *
+  * The view maps each part dir to its srcPart index and mask, so the
+  * WAND kernel gets one cursor per (term, salt, part) stream, exactly as
+  * a scan of the union of the parts would group them.
   *
   * `warm()` additionally pins segments and term stats into the Spark
   * block-manager cache (InMemoryRelation): later scans read columnar
   * batches from memory with batch-level stat pruning on termHash instead
   * of parquet from disk. Safe because a LucyIndex dir is immutable
   * (compaction writes a NEW generation dir). A live store never calls
-  * it — its base must not be pinned (LucyStore pins deltas only).
+  * it: at corpus scale its base does not fit executor memory, and the
+  * part cache already holds what its searches read.
   *
   * Query tokens are stemmed iff the index's terms were: the flag comes
   * from the parts' build manifests (`SearchableIndex.stemming`).
@@ -37,7 +47,8 @@ import lucy.index.{CorpusStats, Deletes, SearchableIndex, Stats, TermStats}
   */
 class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
                                  gatherMaxPostings: Long = Searcher.defaultGatherMaxPostings,
-                                 expandCeiling: Int = 1 << 22) {
+                                 expandCeiling: Int = 1 << 22,
+                                 cache: BlockCache = new BlockCache()) {
 
   def this(spark: SparkSession, index: SearchableIndex) =
     this(spark, index, Searcher.defaultGatherMaxPostings)
@@ -48,17 +59,21 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     if (index.masks.forall(_.isEmpty)) Array.empty else index.masks.toArray
   lazy val stats: CorpusStats = index.corpusStats(spark)
   private val dfCache = TrieMap[String, Option[TermStats]]()
-  // Gathered posting blocks per term (size-capped LRU; see BlockCache):
-  // first query for a term pays one pruned collect job, repeats are pure
-  // driver compute — the serving analog of lucy.js's in-memory index.
-  private val blockCache = new BlockCache()
-  // One shared relation per engine: planning against a fresh
-  // spark.read.parquet per query re-lists files and re-reads footers on
-  // the driver, which serializes concurrent clients.
-  private lazy val segmentsDf = index.segments(spark)
-  private lazy val termStatsDf = index.termStats(spark)
+  // part dirs in view order: a dir's index is its srcPart in this view
+  private val dirs = index.parts.map(_.dir).toIndexedSeq
+  // One shared relation per part and artifact, each tagged with its
+  // srcPart: planning against a fresh spark.read.parquet per query
+  // re-lists files and re-reads footers on the driver, which serializes
+  // concurrent clients.
+  private lazy val partSegments = tagged(_.segments(spark))
+  private lazy val partTermStats = tagged(_.termStats(spark))
+  private lazy val segmentsDf = partSegments.reduce(_ unionByName _)
+  private lazy val termStatsDf = partTermStats.reduce(_ unionByName _)
   private lazy val urlsDf = index.parts.map(_.docmap(spark).select(col("docId"), col("url")))
     .reduce(_ unionByName _)
+
+  private def tagged(rel: LucyIndex => DataFrame): IndexedSeq[DataFrame] =
+    index.parts.indices.map(i => rel(index.parts(i)).withColumn("srcPart", lit(i)))
 
   /** Pin index artifacts into executor memory; returns this. */
   def warm(): this.type = {
@@ -68,12 +83,68 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     this
   }
 
-  /** Live df per term over the engine's own relations; cached per term. */
-  private def lookup(terms: Seq[String]): Map[String, TermStats] = {
+  /** Per term, each part's cache entry, aligned with `dirs`. The pairs
+    * the cache lacks are read by one pruned job over the term stats of
+    * only the parts that lack one.
+    */
+  private def entries(terms: Seq[String]): Map[String, IndexedSeq[PartTerm]] = {
+    val cached = terms.map(t => t -> dirs.map(cache.get(_, t))).toMap
+    val lacking = dirs.indices.filter(i => terms.exists(cached(_)(i).isEmpty))
+    val fetched: Map[(Int, String), TermStats] =
+      if (lacking.isEmpty) Map.empty
+      else lacking.map(partTermStats).reduce(_ unionByName _)
+        .filter(col("term").isin(terms.filter(t => lacking.exists(cached(t)(_).isEmpty)): _*))
+        .select("srcPart", "term", "df", "cf").collect()
+        .map(r => (r.getInt(0), r.getString(1)) -> TermStats(r.getString(1), r.getLong(2), r.getLong(3)))
+        .toMap
+    terms.map(t => t -> dirs.indices.map(i => cached(t)(i).getOrElse {
+      val e = fetched.get((i, t)).fold(PartTerm.absent)(st => PartTerm(Some(st), None))
+      cache.put(dirs(i), t, e)
+      e
+    })).toMap
+  }
+
+  /** Per term, its (srcPart, blocks) streams across the view's parts.
+    * The pairs not gathered yet are read by one pruned job over the
+    * segments of only their parts.
+    */
+  private def streams(terms: Seq[String]): Map[String, Seq[(Int, Array[PostingBlock])]] = {
+    val es = entries(terms)
+    val ungathered = for (t <- terms; i <- dirs.indices if es(t)(i).streams.isEmpty) yield (i, t)
+    val fetched =
+      if (ungathered.isEmpty) Map.empty[(Int, String), Seq[(Int, Array[PostingBlock])]]
+      else Searcher.fetchStreams(spark, ungathered.map(_._1).distinct.map(partSegments).reduce(_ unionByName _),
+        ungathered.map(_._2).distinct)
+    terms.map(t => t -> dirs.indices.flatMap { i =>
+      es(t)(i).streams.getOrElse {
+        val s = fetched.getOrElse((i, t), Nil)
+        cache.put(dirs(i), t, es(t)(i).copy(streams = Some(s)))
+        s
+      }.map { case (_, blocks) => (i, blocks) }
+    }).toMap
+  }
+
+  /** Live df per term, cached per term: the parts' raw df/cf summed,
+    * minus the postings the view's masks name. While the terms' Σ raw df
+    * is within gatherMaxPostings a gather fetches their blocks anyway,
+    * so the masked postings are counted on the driver from the (cached)
+    * blocks; above it `Deletes.deletedDf` counts them in one job.
+    */
+  private[lucy] def lookup(terms: Seq[String]): Map[String, TermStats] = {
     val missing = terms.filterNot(dfCache.contains)
     if (missing.nonEmpty) {
-      val fetched = Deletes.liveTerms(spark, termStatsDf, segmentsDf, masks.toSeq, missing)
-      missing.foreach(t => dfCache.putIfAbsent(t, fetched.get(t)))
+      val raw = entries(missing).flatMap { case (t, es) =>
+        val st = es.flatMap(_.stats)
+        if (st.isEmpty) None else Some(t -> TermStats(t, st.map(_.df).sum, st.map(_.cf).sum))
+      }
+      val live =
+        if (masks.isEmpty || raw.isEmpty) raw
+        else if (raw.valuesIterator.map(_.df).sum > gatherMaxPostings)
+          Deletes.subtract(raw, Deletes.deletedDf(spark, segmentsDf, raw.keys.toSeq, masks.toSeq))
+        else Deletes.subtract(raw, streams(raw.keys.toSeq).map { case (t, ss) =>
+          t -> ss.map { case (i, blocks) => Deletes.deadPostings(blocks, masks(i)) }.sum
+        })
+      missing.foreach(t => dfCache.putIfAbsent(t, live.get(t)))
     }
     terms.flatMap(t => dfCache(t).map(t -> _)).toMap
   }
@@ -143,7 +214,7 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
     // collects, and the exchange shuffles, the physical blocks, masked
     // postings included. Scoring idf uses the live df carried in the plan.
     val sumRawDf = present.map(dfMap(_).gatherDf).sum
-    if (sumRawDf <= gatherMaxPostings) Searcher.gatherLocal(spark, segmentsDf, plan, blockCache)
+    if (sumRawDf <= gatherMaxPostings) Searcher.gatherLocal(spark, plan, streams(present.toSeq))
     else {
       val blocks = Searcher.termBlocks(segmentsDf, present)
       val local =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 import lucy.{Hashing, LucySpec}
-import lucy.index.{PostingBlock, RunIterator, SearchableIndex}
+import lucy.index.{PostingBlock, RunIterator, SearchableIndex, TermStats}
 
 /** A segment block row as shuffled to docId buckets (PostingBlock +
   * routing bucket). */
@@ -19,47 +19,74 @@ private[query] case class BucketedBlock(
     posVarint)
 }
 
-/** Driver-side cache of gathered posting blocks, keyed by term — the
-  * serving-layer analog of lucy.js holding its whole index in memory.
-  * Safe because a LucyIndex directory is immutable (compaction writes a
-  * NEW generation dir and the engine is rebuilt on it): entries never
-  * invalidate. Size-capped LRU so a long-running server holds only the
-  * working set; each entry is ≤ gatherMaxPostings' worth of compressed
-  * blocks. A cache hit makes a repeat-term query pure driver compute —
-  * zero Spark jobs.
+/** One index part's share of one term, as [[BlockCache]] holds it: the
+  * term's raw df/cf in that part (None: the part lacks the term) and,
+  * once gathered, its blocks per salt stream, each sorted by firstDocId
+  * and so one kernel cursor (None: not gathered yet).
+  */
+final case class PartTerm(stats: Option[TermStats], streams: Option[Seq[(Int, Array[PostingBlock])]]) {
+  private[query] def bytes: Long = 64L + streams.iterator.flatten.flatMap(_._2).map(b =>
+    b.docsVarint.length + b.tfsVarint.length + b.dlsVarint.length + b.posVarint.length + 64L).sum
+}
+
+object PartTerm {
+  /** The part does not hold the term: no stats and no blocks to gather. */
+  val absent: PartTerm = PartTerm(None, Some(Nil))
+}
+
+/** Driver-side cache of term stats and gathered posting blocks, keyed by
+  * (part dir, term) — the serving-layer analog of lucy.js holding its
+  * whole index in memory. A part dir is immutable (a put writes a new
+  * delta dir, compaction a new base generation), so an entry never goes
+  * stale: it holds the part's RAW postings, masked ones included, and is
+  * right for every view that holds the part, whatever that view's masks.
+  * One cache therefore serves a store's successive views (LucyStore
+  * hands its own to every engine it builds), and each engine applies its
+  * view's masks when it reads an entry. A query whose (part, term) pairs
+  * all hit is pure driver compute — zero Spark jobs.
   *
-  * Value shape: one entry per (salt, srcPart) stream, blocks sorted by
-  * firstDocId — exactly the kernel's cursor grouping.
-  *
-  * Oversize policy: an entry larger than maxBytes is still
-  * admitted — it evicts everything else and pins the cache above its cap
-  * until the next put evicts it in turn. Deliberate (the alternative is
-  * re-fetching the hottest term on every repeat), and bounded: one entry
-  * is at most gatherMaxPostings' worth of compressed blocks, ≈ a few MB
-  * of varint bytes (2^20 postings × ~2–4 B + 64 B/block overhead), so
-  * the worst-case cache size is maxBytes + one gather.
+  * Size-capped LRU so a long-running server holds only the working set.
+  * Oversize policy: an entry larger than maxBytes is still admitted — it
+  * evicts everything else and pins the cache above its cap until the
+  * next put evicts it in turn. Deliberate (the alternative is re-fetching
+  * the hottest term on every repeat), and bounded: one entry is at most
+  * gatherMaxPostings' worth of compressed blocks, ≈ a few MB of varint
+  * bytes (2^20 postings × ~2–4 B + 64 B/block overhead), so the worst-
+  * case cache size is maxBytes + one gather.
   */
 final class BlockCache(maxBytes: Long = 256L << 20) {
-  private type Groups = Seq[((Int, Int), Array[PostingBlock])]
-  private val map = new java.util.LinkedHashMap[String, (Long, Groups)](64, 0.75f, true)
+  private val map = new java.util.LinkedHashMap[(String, String), (Long, PartTerm)](64, 0.75f, true)
   private var bytes = 0L
 
-  def get(term: String): Option[Groups] = synchronized {
-    Option(map.get(term)).map(_._2)
+  def get(dir: String, term: String): Option[PartTerm] = synchronized {
+    Option(map.get((dir, term))).map(_._2)
   }
 
-  def put(term: String, groups: Groups): Unit = synchronized {
-    if (map.containsKey(term)) return
-    val sz = groups.iterator.flatMap(_._2).map(b =>
-      b.docsVarint.length + b.tfsVarint.length + b.dlsVarint.length + b.posVarint.length + 64L).sum
-    map.put(term, (sz, groups))
+  /** Holds `e` for (dir, term), replacing the entry there, and evicts the
+    * least recently used other entries while the cache is over its cap.
+    */
+  def put(dir: String, term: String, e: PartTerm): Unit = synchronized {
+    val key = (dir, term)
+    val sz = e.bytes
+    Option(map.put(key, (sz, e))).foreach(old => bytes -= old._1)
     bytes += sz
     val it = map.entrySet().iterator()
     while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      if (e.getKey != term) { bytes -= e.getValue._1; it.remove() }
+      val x = it.next()
+      if (x.getKey != key) { bytes -= x.getValue._1; it.remove() }
     }
   }
+
+  /** Drops the entries of every part dir outside `live`. */
+  def retainDirs(live: Set[String]): Unit = synchronized {
+    val it = map.entrySet().iterator()
+    while (it.hasNext) {
+      val x = it.next()
+      if (!live.contains(x.getKey._1)) { bytes -= x.getValue._1; it.remove() }
+    }
+  }
+
+  def clear(): Unit = synchronized { map.clear(); bytes = 0L }
 
   def sizeBytes: Long = synchronized(bytes)
 }
@@ -168,46 +195,34 @@ object Searcher {
     math.max(1L, math.min(maxB.toLong, sumRawDf / 65536 + 1)).toInt
   }
 
-  /** Shape (a): one collect job over the pruned compressed blocks (only
-    * the terms missing from the block cache), WAND kernel + top-k merge
-    * on the driver, result as a LocalRelation (a later .collect() runs
-    * zero jobs; a fully cache-hit query runs zero jobs period).
-    * Bit-identical to the distributed shapes: same kernel, same full
-    * docId range, same total order.
+  /** The blocks of `terms` in `segments`, in one collect job: per
+    * (srcPart, term), its salt streams, each sorted by firstDocId.
     */
-  private[query] def gatherLocal(spark: SparkSession, segments: DataFrame, plan: QueryPlan,
-                                 blockCache: BlockCache): DataFrame = {
+  private[query] def fetchStreams(spark: SparkSession, segments: DataFrame,
+                                  terms: Seq[String]): Map[(Int, String), Seq[(Int, Array[PostingBlock])]] = {
     import spark.implicits._
-    val cached: Map[String, Seq[((Int, Int), Array[PostingBlock])]] =
-      plan.terms.iterator.flatMap(t => blockCache.get(t).map(t -> _)).toMap
-    val missing = plan.terms.filterNot(cached.contains)
-
-    val fetched: Map[String, Seq[((Int, Int), Array[PostingBlock])]] =
-      if (missing.isEmpty) Map.empty
-      else {
-        val rows = termBlocks(segments, missing)
-          .select(blockCols: _*)
-          .withColumn("bucket", lit(0L))
-          .as[BucketedBlock]
-          .collect()
-        val byTerm = rows.groupBy(_.term).map { case (t, g) =>
-          t -> g.groupBy(r => (r.salt, r.srcPart)).toSeq.map { case (key, blocks) =>
-            key -> blocks.sortBy(_.firstDocId).map(_.toBlock)
-          }
-        }
-        // a present term can still collect zero blocks only if segments and
-        // stats disagree; cache the empty groups too (harmless)
-        val complete = missing.iterator.map(t => t -> byTerm.getOrElse(t, Seq.empty)).toMap
-        complete.foreach { case (t, g) => blockCache.put(t, g) }
-        complete
+    termBlocks(segments, terms.toArray)
+      .select(blockCols: _*)
+      .withColumn("bucket", lit(0L))
+      .as[BucketedBlock]
+      .collect()
+      .groupBy(r => (r.srcPart, r.term)).map { case (key, rows) =>
+        key -> rows.groupBy(_.salt).toSeq.map { case (salt, bs) => salt -> bs.sortBy(_.firstDocId).map(_.toBlock) }
       }
+  }
 
+  /** Shape (a): the WAND kernel and top-k merge on the driver, over each
+    * plan term's gathered (srcPart, blocks) streams (the engine fetches
+    * the ones its cache lacks in one collect job); the result is a
+    * LocalRelation, so a later .collect() runs zero jobs. Bit-identical
+    * to the distributed shapes: same kernel, same full docId range, same
+    * total order.
+    */
+  private[query] def gatherLocal(spark: SparkSession, plan: QueryPlan,
+                                 streams: Map[String, Seq[(Int, Array[PostingBlock])]]): DataFrame = {
     val groups = plan.terms.indices.flatMap { ti =>
-      val t = plan.terms(ti)
-      (cached.getOrElse(t, Seq.empty) ++ fetched.getOrElse(t, Seq.empty))
-        .map { case ((_, srcPart), blocks) => (ti, srcPart, blocks) }
+      streams.getOrElse(plan.terms(ti), Nil).map { case (srcPart, blocks) => (ti, srcPart, blocks) }
     }
-
     val hits = Wand.topK(plan, groups, 0L, Long.MaxValue).toArray
     val top = hits.sorted(Wand.bestFirst).take(plan.k)
     val list = new java.util.ArrayList[Row](top.length)

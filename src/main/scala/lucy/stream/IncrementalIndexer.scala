@@ -86,7 +86,8 @@ object IncrementalIndexer {
       if (batch.isEmpty) return
       IndexBuilder.build(batch, dir, config, fingerprint = s"delta-$batchId")
     }
-    val view = viewOf(spark, rootDir, liveParts(spark, rootDir, pending = Some(batchId)))
+    val view = viewOf(spark, rootDir, liveParts(spark, rootDir, pending = Some(batchId)),
+      deleteLog(spark, rootDir))
     val j = view.parts.indexWhere(_.dir == dir)
     val fresh =
       if (view.parts.length == 1) Map.empty[Long, LiveDoc]
@@ -112,17 +113,22 @@ object IncrementalIndexer {
     }
 
   /** The searchable view: current base + live deltas beyond the
-    * compaction frontier, each with its masks.
+    * compaction frontier, each with its masks. The delete log is read
+    * BEFORE the pointer: a compaction that commits its pointer in
+    * between has purged only records naming parts that then left the
+    * view, and those are ignored.
     */
-  def composite(spark: SparkSession, rootDir: String): SearchableIndex =
-    viewOf(spark, rootDir, liveParts(spark, rootDir))
+  def composite(spark: SparkSession, rootDir: String): SearchableIndex = {
+    val log = deleteLog(spark, rootDir)
+    viewOf(spark, rootDir, liveParts(spark, rootDir), log)
+  }
 
   /** The live parts in view order: the current base, then the deltas
     * beyond the compaction frontier that are live — or `pending`, whose
     * masks are being written.
     */
-  private def liveParts(spark: SparkSession, rootDir: String,
-                        pending: Option[Long] = None): Seq[LucyIndex] = {
+  private[stream] def liveParts(spark: SparkSession, rootDir: String,
+                                pending: Option[Long] = None): Seq[LucyIndex] = {
     val cur = currentOrRecovered(spark, rootDir)
     val frontier = cur.map(_.compactedThrough).getOrElse(-1L)
     val deltas = listDeltas(spark, rootDir) ++ pending.map(id => id -> LucyIndex(s"$rootDir/deltas/delta-$id"))
@@ -130,10 +136,13 @@ object IncrementalIndexer {
       deltas.sortBy(_._1).filter(_._1 > frontier).map(_._2)
   }
 
-  /** `parts` with the masks of every committed record that names one. */
-  private def viewOf(spark: SparkSession, rootDir: String, parts: Seq[LucyIndex]): CompositeIndex = {
+  /** `parts` with the masks of every record, in their own masks or in
+    * the delete `log`, that names one.
+    */
+  private[stream] def viewOf(spark: SparkSession, rootDir: String, parts: Seq[LucyIndex],
+                             log: Seq[(Long, Seq[Mask])]): CompositeIndex = {
     val records = parts.flatMap(p => Manifest.read[Mask](spark, s"${p.dir}/meta/masks").getOrElse(Nil)) ++
-      deleteLog(spark, rootDir).flatMap(_._2)
+      log.flatMap(_._2)
     val byPart = records.groupBy(m => s"$rootDir/${m.part}")
     val dead = parts.map(p => byPart.get(p.dir).fold(PartMask(Array.emptyLongArray, 0L))(ms =>
       PartMask(ms.map(_.docId).sorted.toArray, ms.map(_.docLen).sum)))
@@ -155,7 +164,7 @@ object IncrementalIndexer {
     if (urls.isEmpty) return
     val parts = liveParts(spark, rootDir)
     if (parts.isEmpty) return
-    val view = viewOf(spark, rootDir, parts)
+    val view = viewOf(spark, rootDir, parts, deleteLog(spark, rootDir))
     val masks = view.liveDocs(spark, urls.map(lucy.LucySpec.docIdForUrl).distinct)
       .map(d => Mask(relative(rootDir, view.parts(d.part)), d.docId, d.docLen))
     if (masks.isEmpty) return
@@ -168,7 +177,7 @@ object IncrementalIndexer {
     deleteLog(spark, rootDir).flatMap(_._2).map(_.docId).distinct.sorted.toArray
 
   /** Committed delete generations with their masks, ascending. */
-  private def deleteLog(spark: SparkSession, rootDir: String): Seq[(Long, Seq[Mask])] =
+  private[stream] def deleteLog(spark: SparkSession, rootDir: String): Seq[(Long, Seq[Mask])] =
     Manifest.generations(spark, s"$rootDir/deletes", "del").flatMap { g =>
       Manifest.read[Mask](spark, s"$rootDir/deletes/del-$g").map(g -> _)
     }
@@ -190,7 +199,7 @@ object IncrementalIndexer {
     // the delete generations applied here are purged after the pointer
     // commits (their records name parts that then left the view)
     val log = deleteLog(spark, rootDir)
-    val view = viewOf(spark, rootDir, parts)
+    val view = viewOf(spark, rootDir, parts, log)
 
     val postings = view.parts.zip(view.masks).map { case (p, dead) =>
       p.segments(spark).as[SegmentRow].flatMap { r =>

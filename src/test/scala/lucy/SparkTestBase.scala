@@ -3,7 +3,12 @@ package lucy
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.lucytest.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import lucy.index.{Ingest, Stats}
 import lucy.query.{NaiveSearch, QueryMode}
@@ -52,6 +57,32 @@ abstract class SparkFunSuite extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** [[jobsIn]], plus the executed plans of the Dataset actions `body`
+    * ran. The plans come from a session-wide listener, so `body` must be
+    * the only code running queries meanwhile.
+    */
+  protected def plansIn[T](body: => T): (T, Int, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobsIn drains the listener bus, which also delivers the plans
+    val (r, jobs) = try jobsIn(body) finally spark.listenerManager.unregister(listener)
+    (r, jobs, plans.asScala.toSeq)
+  }
+
+  /** The root paths of every file relation `plan` scans, read through
+    * any in-memory cache of it.
+    */
+  protected def scannedPaths(plan: SparkPlan): Seq[String] = plan.collect {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+    case m: InMemoryTableScanExec => scannedPaths(m.relation.cachedPlan)
+    case a: AdaptiveSparkPlanExec => scannedPaths(a.executedPlan)
+  }.flatten
 
   /** Two top-k answers agree bit for bit: same rows in the same order,
     * each with the same docId, raw score bits and nTerms.

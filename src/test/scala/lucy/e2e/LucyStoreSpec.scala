@@ -139,6 +139,50 @@ class LucyStoreSpec extends SparkFunSuite {
     store.close()
   }
 
+  test("the part cache outlives the view: a put scans only its delta, a delete runs no job, compaction retires the base") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("lucy-store-cache").toString + "/store"
+    val store = new LucyStore(spark, root)
+    val (q, m, k) = ("spark shuffle", QueryMode.And, 10)
+    store.bootstrap(PagesGen.pages(spark, 200))
+    val base = store.view.parts.head.dir
+    assertSame(store.search(q, m, k), naiveOver(contents(0L until 200L, Map.empty), q, m, k), "bootstrap")
+    val baseEntry = store.partCache.get(base, "spark")
+    assert(baseEntry.flatMap(_.streams).exists(_.nonEmpty), "the base's gathered blocks are cached")
+
+    // a put of new urls and recrawls (which mask base rows): the repeated
+    // query reads only the new delta, and the base's entry is the same one
+    val recrawled = (0L until 200L by 4).map(_ -> 1).toMap
+    store.put((recrawled.keys.toSeq.sorted.map(recrawl(_, 1)) ++ (200L until 250L).map(PagesGen.page)).toDF(),
+      batchId = 0L)
+    // (a gather's answer is a LocalRelation: all its jobs run inside search)
+    val (afterPut, putJobs, plans) = plansIn(store.search(q, m, k))
+    val scanned = plans.flatMap(scannedPaths)
+    assert(putJobs >= 1 && scanned.nonEmpty, "the new delta is read")
+    assert(scanned.forall(_.contains("/deltas/delta-0/")), s"scans outside the new delta: $scanned")
+    assert(store.partCache.get(base, "spark").exists(e => baseEntry.exists(_ eq e)), "the base's entry survives")
+    val live = 0L until 250L
+    assertSame(afterPut, naiveOver(contents(live, recrawled), q, m, k), "put")
+
+    // a delete changes only masks: the repeated query runs no job
+    store.delete(Seq(PagesGen.page(8).url, PagesGen.page(9).url, PagesGen.page(210).url))
+    val afterDelete = live.filterNot(Set(8L, 9L, 210L))
+    val (afterDel, deleteJobs) = jobsIn(store.search(q, m, k))
+    assert(deleteJobs === 0, "every (part, term) pair hits the part cache")
+    assertSame(afterDel, naiveOver(contents(afterDelete, recrawled), q, m, k), "delete")
+
+    // compaction retires the base and the delta: their entries leave
+    store.compact()
+    assertSame(store.search(q, m, k), naiveOver(contents(afterDelete, recrawled), q, m, k), "compact")
+    val newBase = store.view.parts.map(_.dir)
+    assert(newBase.length === 1 && newBase.head != base)
+    assert(store.partCache.get(base, "spark").isEmpty && store.partCache.get(s"$root/deltas/delta-0", "spark").isEmpty,
+      "the retired parts' entries leave")
+    assert(store.partCache.get(newBase.head, "spark").nonEmpty)
+    store.close()
+    assert(store.partCache.sizeBytes === 0L, "close() clears the part cache")
+  }
+
   test("searches racing put, delete, close() and compact see one state the store passed through") {
     import spark.implicits._
     val root = Files.createTempDirectory("lucy-store-race").toString + "/store"

@@ -2,17 +2,16 @@ package lucy.query
 
 import java.nio.file.Files
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 import lucy.SparkFunSuite
 import lucy.fixtures.PagesGen
-import lucy.index.{IndexBuilder, LucyIndex}
+import lucy.index.{Deletes, IndexBuilder, LucyIndex}
 import lucy.stream.IncrementalIndexer
 
 /** Spark jobs per execution shape: the gather shape collects once per
   * new term and then answers from the BlockCache with no job at all;
   * the distributed shapes start jobs on every query. A term lookup over
-  * a multi-part view is one job with no exchange.
+  * a multi-part view is one job with no exchange, and a masked view's
+  * live df costs no job beyond the gather's block fetch.
   */
 class QueryJobsSpec extends SparkFunSuite {
 
@@ -63,25 +62,41 @@ class QueryJobsSpec extends SparkFunSuite {
     assert(view.parts.length === 2 && view.masks.forall(_.isEmpty), "base + a delta of new urls")
 
     val terms = Seq("spark", "shuffle", "wand")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    // jobsIn drains the listener bus, which also delivers the plans
-    val (got, jobs) =
-      try jobsIn(view.lookupTerms(spark, terms))
-      finally spark.listenerManager.unregister(listener)
+    val (got, jobs, plans) = plansIn(view.lookupTerms(spark, terms))
     assert(jobs === 1, "one lookup job")
-    assert(!plans.isEmpty && !plans.stream().anyMatch(_.contains("Exchange")),
-      s"no exchange in the lookup: ${plans.peek()}")
+    assert(plans.nonEmpty && !plans.exists(_.toString.contains("Exchange")),
+      s"no exchange in the lookup: ${plans.headOption}")
 
     assert(got.keySet === terms.toSet)
     terms.foreach { t =>
       val perPart = view.parts.map(_.lookupTerms(spark, Seq(t))(t))
       assert((got(t).df, got(t).cf) === ((perPart.map(_.df).sum, perPart.map(_.cf).sum)), t)
     }
+  }
+
+  test("a masked view's driver-side dead count equals Deletes.deletedDf for every term") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("lucy-dead-count").toString + "/store"
+    IncrementalIndexer.bootstrap(PagesGen.pages(spark, 200), root)
+    // recrawls with other pages' text mask base rows; the delete masks
+    // base and delta rows
+    val recrawls = (0L until 200L by 3).map { i =>
+      val p = PagesGen.page(i)
+      p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 86400000L),
+        html = PagesGen.page(i + 100000L).html, text = PagesGen.page(i + 100000L).text)
+    }
+    IncrementalIndexer.indexBatch((recrawls ++ (200L until 260L).map(PagesGen.page)).toDF(), root, 0L)
+    IncrementalIndexer.deleteUrls(spark, root, Seq(0L, 1L, 3L, 201L, 202L).map(PagesGen.page(_).url))
+    val view = IncrementalIndexer.composite(spark, root)
+    assert(view.parts.length === 2 && view.masks.forall(_.nonEmpty), "both parts masked")
+
+    val terms = view.termStats(spark).select("term").distinct().as[String].collect().toSeq
+    val byJob = Deletes.liveTerms(spark, view.termStats(spark), view.segments(spark), view.masks, terms)
+    assert(Deletes.deletedDf(spark, view.segments(spark), terms, view.masks).values.sum > 0)
+    val engine = new QueryEngine(spark, view)
+    val (onDriver, jobs) = jobsIn(engine.lookup(terms))
+    assert(jobs === 2, "the stats and the blocks, and no dead-count job")
+    assert(onDriver.keySet === byJob.keySet)
+    terms.foreach(t => assert(onDriver.get(t) === byJob.get(t), t))
   }
 }

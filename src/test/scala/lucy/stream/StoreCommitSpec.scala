@@ -9,8 +9,9 @@ import lucy.index.{IndexConfig, Manifest}
 import lucy.query.{QueryMode, Searcher}
 
 /** Commit points of store mutations: a misconfigured put or compaction
-  * commits nothing, and a crash between a mutation's records leaves the
-  * last consistent view.
+  * commits nothing, a crash between a mutation's records leaves the
+  * last consistent view, and a view composed across a compaction's
+  * commit is consistent.
   */
 class StoreCommitSpec extends SparkFunSuite {
 
@@ -79,5 +80,33 @@ class StoreCommitSpec extends SparkFunSuite {
     IncrementalIndexer.deleteUrls(spark, root, (1L until 200L by 7).map(i => s"https://example.org/p/$i"))
     fs.delete(new Path(s"$root/deletes/del-2/_SUCCESS"), false)
     assertAnswers(root, pages.filter(!col("url").isin(committed: _*)), "torn")
+  }
+
+  test("a view of the pre-compaction delete log and the post-compaction pointer equals the contents") {
+    val root = s"$tmp/lograce"
+    val base = PagesGen.pages(spark, 200)
+    IncrementalIndexer.bootstrap(base, root)
+    val recrawls = PagesGen.recrawl(spark, 60, 1000000L)
+    IncrementalIndexer.indexBatch(recrawls, root, 0L)
+    val deleted = (0L until 200L by 9).map(i => s"https://example.org/p/$i")
+    IncrementalIndexer.deleteUrls(spark, root, deleted)
+    // a view's reads, split by a compaction: the log first, then the
+    // compaction commits its pointer and purges the log, then the pointer
+    val log = IncrementalIndexer.deleteLog(spark, root)
+    assert(log.nonEmpty)
+    IncrementalIndexer.compact(spark, root)
+    assert(IncrementalIndexer.deleteLog(spark, root).isEmpty, "the compaction purged the log")
+    val view = IncrementalIndexer.viewOf(spark, root, IncrementalIndexer.liveParts(spark, root), log)
+    val contents = base.unionByName(recrawls).filter(!col("url").isin(deleted: _*))
+    probes.foreach { case (q, m, k) =>
+      assertSame(Searcher.search(spark, view, q, m, k), naiveOver(contents, q, m, k), s"raced[$q/$m]")
+    }
+
+    // a record dir purged between its _SUCCESS check and the data read
+    // reads as absent
+    val purged = s"$root/deletes/del-9"
+    Manifest.write(spark, purged, log.head._2)
+    fs.delete(new Path(s"$purged/part-00000.json"), false)
+    assert(Manifest.read[IncrementalIndexer.Mask](spark, purged) === None)
   }
 }
