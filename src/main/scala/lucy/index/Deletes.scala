@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   *
   *  - N and avgdl exclude the dead docs (`SearchableIndex.totals`);
   *  - df per query term is the raw index df MINUS the term's postings in
-  *    dead pairs (`deadPostings` over blocks a search gathers anyway, or
-  *    `deletedDf`: a pruned scan of the query terms' blocks only — never
-  *    a corpus scan);
+  *    dead pairs. `QueryEngine.lookup` is the one path that computes it:
+  *    `deadPostings` over blocks a search gathers anyway, or `deletedDf`
+  *    (a pruned scan of the query terms' blocks only, never a corpus
+  *    scan) above the gather ceiling;
   *  - a WAND cursor over a part never lands on that part's dead docIds.
   *
   * The masks ship in the query plan's task closure; compaction drops
@@ -49,16 +50,6 @@ object Deletes {
     */
   val maxTombstones: Int = 1 << 20
 
-  /** Query-term stats over a view's relations: the raw df/cf lookup,
-    * then df minus the term's masked postings (`subtract`).
-    */
-  def liveTerms(spark: SparkSession, termStats: DataFrame, segments: => DataFrame,
-                masks: Seq[Array[Long]], terms: Seq[String]): Map[String, TermStats] = {
-    val raw = Stats.lookupTerms(termStats, terms)
-    if (raw.isEmpty || masks.forall(_.isEmpty)) raw
-    else subtract(raw, deletedDf(spark, segments, raw.keys.toSeq, masks))
-  }
-
   /** Raw term stats minus each term's `dead` postings; rawDf keeps the
     * physical count, and a term with no live posting is absent.
     */
@@ -84,8 +75,10 @@ object Deletes {
   /** Per-term count of postings in dead (srcPart, docId) pairs — a
     * pruned scan of ONLY the given terms' blocks in the masked parts
     * (termHash isin pushdown), so the cost scales with the query, not
-    * the corpus. One job; returns a tiny per-term map. It decodes every
-    * block it reads, so it also serves as the reference for the skipping
+    * the corpus. One job; returns a tiny per-term map. `segments` is a
+    * view's union tagged with `srcPart`, as QueryEngine builds it. It
+    * decodes every block it reads, so an engine forced onto this branch
+    * (`gatherMaxPostings = 0`) is the reference for the skipping
     * `deadPostings` (QueryJobsSpec).
     */
   def deletedDf(spark: SparkSession, segments: DataFrame, terms: Seq[String],

@@ -57,6 +57,11 @@ object LiveDoc {
   * documents are masked in their parts, so the union of the parts'
   * unmasked rows is exactly the view's contents — no read-time version
   * resolution anywhere.
+  *
+  * A view is data: parts, masks and manifest arithmetic. It builds no
+  * relation over its parts; [[lucy.query.QueryEngine]] is the one place
+  * that unions them and tags each row with its part's index (`srcPart`),
+  * and compaction reads each part's own relations.
   */
 trait SearchableIndex {
 
@@ -78,36 +83,15 @@ trait SearchableIndex {
     CorpusStats(n, if (n == 0) 0.0 else len.toDouble / n)
   }
 
-  /** Segment blocks, tagged with `srcPart` (the index into `parts`):
-    * blocks of one (term, salt, srcPart) form a sorted, non-overlapping
-    * docId stream (a cursor); streams of different parts overlap in
-    * docId space and are separate cursors in the kernel.
+  /** Query-term stats for planning: per term its live df (the parts' raw
+    * df summed, minus the postings the masks name), raw df and cf; a term
+    * with no live posting is absent. The one df path is
+    * [[lucy.query.QueryEngine]]'s lookup, here through a throwaway engine
+    * (as `Searcher.search` runs a search), so parts that disagree on
+    * stemming fail here as a search over them does.
     */
-  def segments(spark: SparkSession): DataFrame =
-    parts.zipWithIndex.map { case (p, i) =>
-      p.segments(spark).withColumn("srcPart", lit(i))
-    }.reduce(_ unionByName _)
-
-  /** The live docmap: each part's rows minus its mask. */
-  def docmap(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    parts.zip(masks).map { case (p, dead) =>
-      if (dead.isEmpty) p.docmap(spark)
-      else p.docmap(spark).join(broadcast(dead.toSeq.toDF("docId")), Seq("docId"), "left_anti")
-    }.reduce(_ unionByName _)
-  }
-
-  /** The parts' term-stats rows, unioned: one row per (part, term) with
-    * that part's raw df/cf, masked postings included. A term's view-wide
-    * df/cf is the sum of its rows (Stats.lookupTerms sums on the driver;
-    * lookupTerms also subtracts masked postings).
-    */
-  def termStats(spark: SparkSession): DataFrame =
-    parts.map(_.termStats(spark)).reduce(_ unionByName _)
-
-  /** Query-term stats for planning (Deletes.liveTerms). */
   def lookupTerms(spark: SparkSession, terms: Seq[String]): Map[String, TermStats] =
-    Deletes.liveTerms(spark, termStats(spark), segments(spark), masks, terms)
+    new lucy.query.QueryEngine(spark, this).lookup(terms)
 
   /** The live docmap rows of `ids`: one pruned scan of the parts'
     * docmaps (one collect job); rows the masks name are dropped.
@@ -145,14 +129,15 @@ trait SearchableIndex {
   *   meta/partitions/ json     per-partition lineage + metrics
   *   meta/build/      json     BuildManifest (fingerprint, timings) — LAST
   * }}}
+  * Its relations are the stages as written; `srcPart` belongs to a view,
+  * so only QueryEngine adds it.
   */
 case class LucyIndex(dir: String) extends SearchableIndex {
   def parts: Seq[LucyIndex] = Seq(this)
   val masks: Seq[Array[Long]] = Seq(Array.emptyLongArray)
-  override def docmap(spark: SparkSession): DataFrame = LucyIndex.read(spark, s"$dir/docmap")
-  override def termStats(spark: SparkSession): DataFrame = LucyIndex.read(spark, s"$dir/stats/terms")
-  override def segments(spark: SparkSession): DataFrame =
-    LucyIndex.read(spark, s"$dir/segments").withColumn("srcPart", lit(0))
+  def docmap(spark: SparkSession): DataFrame = LucyIndex.read(spark, s"$dir/docmap")
+  def termStats(spark: SparkSession): DataFrame = LucyIndex.read(spark, s"$dir/stats/terms")
+  def segments(spark: SparkSession): DataFrame = LucyIndex.read(spark, s"$dir/segments")
   def manifest(spark: SparkSession): Option[BuildManifest] = Manifest.readBuild(spark, dir)
   /** From the build manifest; a manifest without sumDocLen recovers it
     * from docs × avgdl (exact while Σ docLen < 2^51).
@@ -197,10 +182,9 @@ case class CompositeIndex(parts: Seq[LucyIndex], dead: Seq[PartMask] = Nil) exte
 
 /** Batch index build — entry point 1 (SURVEY.md §3.1).
   *
-  * Stage structure and shuffles (r2: the old explode + groupBy(docId,
-  * term) tf-aggregation shuffle is GONE — a doc's postings never span
-  * rows, so tf/positions are computed per document in one mapper pass,
-  * Ingest.termPostingsUdf):
+  * Stage structure and shuffles. A document's postings never span rows,
+  * so tf and positions are computed per document in one mapper pass
+  * (Ingest.termPostingsUdf) and no stage aggregates by (docId, term):
   *  1. scan + lang filter (pushed to parquet) .......... no shuffle
   *  2. url dedup (max_by hash agg) ..................... SHUFFLE on url
   *  3. extractText + tokenize UDFs, docId .............. pipelined
@@ -242,9 +226,9 @@ object IndexBuilder {
     try {
       // Stage 5 input: (docId, docLen, term, tf, posBytes) — computed in
       // ONE local pass per document (Ingest.termPostingsUdf). A doc's
-      // postings never span rows, so r1's groupBy(docId, term) shuffle
-      // of the exploded token stream was pure wire cost; positions leave
-      // the mapper already varint-compressed (~1 byte/token).
+      // postings never span rows, so no shuffle groups the exploded
+      // token stream; positions leave the mapper already
+      // varint-compressed (~1 byte/token).
       val termTfDl = cleaned
         .select(col("docId"), size(col("tokens")).as("docLen"),
           explode(Ingest.termPostingsUdf(col("tokens"))).as("tp"))
@@ -263,7 +247,8 @@ object IndexBuilder {
                  frontier: Option[Long] = None): BuildManifest = {
     val spark = docmapSrc.sparkSession
     val t0 = System.nanoTime()
-    // marker FIRST: partial builds are identity-guarded too (ADVICE r1)
+    // marker FIRST: a partial build is identity-guarded too, so a resume
+    // with another fingerprint refuses before any stage is reused
     Manifest.claimFingerprint(spark, indexDir, fingerprint)
     val numPartitions =
       if (config.numPartitions > 0) config.numPartitions
@@ -291,16 +276,15 @@ object IndexBuilder {
       s"docId collision: ${statsRow.getLong(2)} distinct docIds for " +
         s"${statsRow.getLong(3)} urls (LucySpec §8.5)")
 
-    // Scale-adaptive partition sizing (r7, guide §2 "derive from input
-    // size rather than a constant"): the session's shuffle width is the
-    // CAP, not the width — a 10k-doc delta was paying 32 sort/pack tasks
-    // and writing 32 near-empty segment files per put (and every later
-    // composite-view scan re-opened all of them). Σ docLen (exact, from
-    // the stats pass above) is a tight upper bound on posting rows, so
-    // size the range exchange to ~512k postings per partition, capped at
-    // the configured width — the 270k-doc bench build derives ≥ 32 and
-    // keeps its exact r6 plan; only genuinely small inputs narrow.
-    // An explicit config.numPartitions still pins everything.
+    // Partition sizing derives from the input: the session's shuffle
+    // width is the CAP, not the width, so a small delta does not pay one
+    // sort/pack task and one near-empty segment file per shuffle
+    // partition (files every later view scan re-opens). Σ docLen (exact,
+    // from the stats pass above) is a tight upper bound on posting rows,
+    // so the range exchange gets ~512k postings per partition, capped at
+    // the configured width, which a build reaches once Σ docLen passes
+    // width × 512k. An explicit config.numPartitions still pins
+    // everything.
     val segParts =
       if (config.numPartitions > 0) numPartitions
       else math.max(1, math.min(numPartitions.toLong,

@@ -29,7 +29,7 @@ case class BuildManifest(
       * into it (IncrementalIndexer.compact). Lets a lost `current`
       * pointer be recovered EXACTLY — re-including an already-compacted
       * delta would double-count df in the view's summed term stats
-      * (Stats.lookupTerms) and shift idf. None (plain batch builds,
+      * (QueryEngine.lookup) and shift idf. None (plain batch builds,
       * older manifests) means "no deltas folded" (frontier −1).
       */
     @JsonDeserialize(contentAs = classOf[java.lang.Long]) // else small values box as Integer

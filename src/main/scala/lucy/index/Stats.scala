@@ -9,7 +9,7 @@ case class CorpusStats(n: Long, avgdl: Double)
 /** Per-term statistics: document frequency + collection frequency.
   *
   * `df` is the LIVE df (masked postings excluded, see
-  * SearchableIndex.lookupTerms); `rawDf` is what a scan of the term's
+  * QueryEngine.lookup); `rawDf` is what a scan of the term's
   * blocks physically touches, masked postings included (the -1 sentinel
   * means "same as df", as in an unmasked view). Routing between the
   * gather and distributed shapes must use rawDf (`gatherDf`): the gather
@@ -33,23 +33,10 @@ object Stats {
     termTf.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
 
-  /** Driver-side lookup for a small set of query terms — one tiny job
-    * with an `isin` pushdown (SURVEY.md §3.2 stage 2) and no exchange.
-    * A view's term stats hold one row per (part, term); the at most
-    * parts × terms rows are summed per term here.
-    */
-  def lookupTerms(termStatsDf: DataFrame, terms: Seq[String]): Map[String, TermStats] = {
-    if (terms.isEmpty) return Map.empty
-    import org.apache.spark.sql.Row
-    termStatsDf.filter(col("term").isin(terms: _*))
-      .select("term", "df", "cf").collect()
-      .map { case Row(t: String, df: Long, cf: Long) => TermStats(t, df, cf) }
-      .groupMapReduce(_.term)(identity)((a, b) => TermStats(a.term, a.df + b.df, a.cf + b.cf))
-  }
-
-  /** Prefix expansion (§8.6 r2): matching terms in ascending order,
-    * capped at maxExpand. StringStartsWith pushes to the parquet scan of
-    * the term-sorted stats table, so this prunes like a range probe.
+  /** Prefix expansion (§8.6): the distinct matching terms in ascending
+    * order, capped at maxExpand. StringStartsWith pushes to the parquet
+    * scan of the term-sorted stats table, so this prunes like a range
+    * probe.
     */
   def expandPrefix(termStatsDf: DataFrame, prefix: String, maxExpand: Int): Seq[String] =
     termStatsDf.select(col("term"))

@@ -26,7 +26,12 @@ import lucy.index.{CorpusStats, Deletes, LucyIndex, PostingBlock, SearchableInde
   *
   * The view maps each part dir to its srcPart index and mask, so the
   * WAND kernel gets one cursor per (term, salt, part) stream, exactly as
-  * a scan of the union of the parts would group them.
+  * a scan of the union of the parts would group them. `srcPart` belongs
+  * to a view, so this is the only place that unions a view's relations
+  * and tags their rows with it; a part's own relations carry no srcPart.
+  *
+  * `lookup` is the only code that computes a view's live df:
+  * `SearchableIndex.lookupTerms` runs it through a throwaway engine.
   *
   * `warm()` additionally pins segments and term stats into the Spark
   * block-manager cache (InMemoryRelation): later scans read columnar
@@ -62,7 +67,7 @@ class QueryEngine private[lucy] (spark: SparkSession, index: SearchableIndex,
   // part dirs in view order: a dir's index is its srcPart in this view
   private val dirs = index.parts.map(_.dir).toIndexedSeq
   // One shared relation per part and artifact, each tagged with its
-  // srcPart: planning against a fresh spark.read.parquet per query
+  // srcPart (the only place a view's relations get one): planning against a fresh spark.read.parquet per query
   // re-lists files and re-reads footers on the driver, which serializes
   // concurrent clients.
   private lazy val partSegments = tagged(_.segments(spark))

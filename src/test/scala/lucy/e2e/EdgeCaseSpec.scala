@@ -50,7 +50,8 @@ class EdgeCaseSpec extends SparkFunSuite {
     IncrementalIndexer.indexBatch(delta, root, 0L, cfg)
     val comp = IncrementalIndexer.composite(spark, root)
     // salting engaged in both parts
-    assert(comp.segments(spark).select("salt").distinct().count() > 1)
+    assert(comp.parts.length === 2)
+    comp.parts.foreach(p => assert(p.segments(spark).select("salt").distinct().count() > 1, p.dir))
 
     val all = PagesGen.pages(spark, 500)
     val cleaned = Ingest.cleanPages(all)

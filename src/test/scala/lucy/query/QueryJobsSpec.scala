@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import lucy.SparkFunSuite
 import lucy.fixtures.PagesGen
-import lucy.index.{Deletes, IndexBuilder, LucyIndex}
+import lucy.index.{IndexBuilder, LucyIndex}
 import lucy.stream.IncrementalIndexer
 
 /** Spark jobs per execution shape: the gather shape collects once per
@@ -90,9 +90,11 @@ class QueryJobsSpec extends SparkFunSuite {
     val view = IncrementalIndexer.composite(spark, root)
     assert(view.parts.length === 2 && view.masks.forall(_.nonEmpty), "both parts masked")
 
-    val terms = view.termStats(spark).select("term").distinct().as[String].collect().toSeq
-    val byJob = Deletes.liveTerms(spark, view.termStats(spark), view.segments(spark), view.masks, terms)
-    assert(Deletes.deletedDf(spark, view.segments(spark), terms, view.masks).values.sum > 0)
+    val terms = view.parts.flatMap(_.termStats(spark).select("term").as[String].collect()).distinct
+    // an engine that never gathers counts the dead postings with
+    // Deletes.deletedDf, which decodes every block it reads
+    val byJob = new QueryEngine(spark, view, gatherMaxPostings = 0L).lookup(terms)
+    assert(byJob.values.exists(st => st.df < st.gatherDf), "the masks name some term's postings")
     val engine = new QueryEngine(spark, view)
     val (onDriver, jobs) = jobsIn(engine.lookup(terms))
     assert(jobs === 2, "the stats and the blocks, and no dead-count job")

@@ -141,9 +141,11 @@ class IncrementalSpec extends SparkFunSuite {
         NaiveSearch.search(termTf, docmap, stats, qs, m, k), s"recrawl[$qs]")
     }
     // exactly-once: replaying a batch id is a no-op
-    val before = idx.segments(spark).count()
+    val before = idx.parts.map(_.segments(spark).count()).sum
     IncrementalIndexer.indexBatch(PagesGen.recrawl(spark, 60, 1000000L), root, 0L)
-    assert(IncrementalIndexer.composite(spark, root).segments(spark).count() === before)
+    val replayed = IncrementalIndexer.composite(spark, root)
+    assert(replayed.parts === idx.parts)
+    assert(replayed.parts.map(_.segments(spark).count()).sum === before)
   }
 
   test("deletes: masked view bit-equal to naive over survivors; compaction purges; re-add") {
@@ -181,9 +183,9 @@ class IncrementalSpec extends SparkFunSuite {
     val after = IncrementalIndexer.composite(spark, root)
     assert(after.masks.forall(_.isEmpty), "purged log must not mask")
     assert(IncrementalIndexer.readTombstones(spark, root).isEmpty, "log purged")
-    assert(after.docmap(spark).count() === docmap.count())
-    val decodedIds = after.segments(spark).drop("srcPart").as[SegmentRow]
-      .flatMap(r => PostingBlock.decode(r.toBlock).docIds).collect().toSet
+    assert(after.parts.map(_.docmap(spark).count()).sum === docmap.count())
+    val decodedIds = after.parts.flatMap(_.segments(spark).as[SegmentRow]
+      .flatMap(r => PostingBlock.decode(r.toBlock).docIds).collect()).toSet
     assert(decodedIds.intersect(deletedIds).isEmpty, "purge must drop postings")
     queries.foreach { case (qs, m, k) =>
       assertSame(
@@ -225,7 +227,7 @@ class IncrementalSpec extends SparkFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val gotDf = idx.lookupTerms(spark, expectedDf.keys.toSeq).map { case (t, st) => t -> st.df }
     assert(gotDf === expectedDf, "replay must not inflate df")
-    assert(idx.termStats(spark).select("term").distinct().as[String].collect().toSet
+    assert(idx.parts.flatMap(_.termStats(spark).select("term").as[String].collect()).toSet
       === expectedDf.keySet, "no term beyond the reference vocabulary")
   }
 
@@ -263,7 +265,7 @@ class IncrementalSpec extends SparkFunSuite {
     assert(IncrementalIndexer.readCurrent(spark, root) === None)
     val comp = IncrementalIndexer.composite(spark, root)
     assert(comp.parts.exists(_.dir.endsWith("gen-1")), "recovered view must serve the base")
-    assert(comp.segments(spark).count() > 0)
+    assert(comp.parts.map(_.segments(spark).count()).sum > 0)
 
     // ADVICE r2: the recovered frontier comes from the base generation's
     // OWN manifest, so the already-compacted delta-0 is NOT re-included —
@@ -274,7 +276,7 @@ class IncrementalSpec extends SparkFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val recDf = comp.lookupTerms(spark, wantDf.keys.toSeq).map { case (t, st) => t -> st.df }
     assert(recDf === wantDf, "recovered view df must be exact (ADVICE r2 double-count)")
-    assert(comp.termStats(spark).select("term").distinct().as[String].collect().toSet
+    assert(comp.parts.flatMap(_.termStats(spark).select("term").as[String].collect()).toSet
       === wantDf.keySet, "no term beyond the reference vocabulary")
   }
 }

@@ -11,7 +11,7 @@ import lucy.query.{QueryMode, Searcher}
 /** Commit points of store mutations: a misconfigured put or compaction
   * commits nothing, a crash between a mutation's records leaves the
   * last consistent view, and a view composed across a compaction's
-  * commit is consistent.
+  * commit, or across a delete and a put, is consistent.
   */
 class StoreCommitSpec extends SparkFunSuite {
 
@@ -108,5 +108,30 @@ class StoreCommitSpec extends SparkFunSuite {
     Manifest.write(spark, purged, log.head._2)
     fs.delete(new Path(s"$purged/part-00000.json"), false)
     assert(Manifest.read[IncrementalIndexer.Mask](spark, purged) === None)
+  }
+
+  test("a delete and a re-adding put inside a view's reads: the view re-reads the delete log") {
+    val root = s"$tmp/readdrace"
+    val base = PagesGen.pages(spark, 200)
+    IncrementalIndexer.bootstrap(base, root)
+    val readded = (0L until 60L by 4).map(i => s"https://example.org/p/$i")
+    val recrawls = PagesGen.recrawl(spark, 60, 1000000L).filter(col("url").isin(readded: _*))
+    // between the view's first log read and its parts listing, a delete
+    // commits and a put re-adds the deleted urls
+    var firstLog = Seq.empty[(Long, Seq[IncrementalIndexer.Mask])]
+    val view = IncrementalIndexer.composite(spark, root, () => {
+      firstLog = IncrementalIndexer.deleteLog(spark, root)
+      IncrementalIndexer.deleteUrls(spark, root, readded)
+      IncrementalIndexer.indexBatch(recrawls, root, 0L)
+    })
+    assert(view.parts.length === 2 && IncrementalIndexer.deleteLog(spark, root).length === 1)
+    val contents = base.filter(!col("url").isin(readded: _*)).unionByName(recrawls)
+    probes.foreach { case (q, m, k) =>
+      assertSame(Searcher.search(spark, view, q, m, k), naiveOver(contents, q, m, k), s"readded[$q/$m]")
+    }
+    // composed from the first log read alone, both versions of each
+    // re-added url are live
+    val once = IncrementalIndexer.viewOf(spark, root, view.parts, firstLog)
+    assert(once.corpusStats(spark).n === view.corpusStats(spark).n + readded.length)
   }
 }
